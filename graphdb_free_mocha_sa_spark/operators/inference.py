@@ -2,19 +2,36 @@
 
 The reference engine materializes inference on write with ruleset
 ``owl-horst-optimized`` (repo-config.ttl:26) and sameAs expansion
-(repo-config.ttl:45). Spark-first re-expression:
+(repo-config.ttl:45). Spark-first re-expression, one mechanism per concern:
 
-* **TBox (schema) closure on the driver** — rdfs:subClassOf / subPropertyOf /
-  domain / range / TransitiveProperty / SymmetricProperty / inverseOf triples
-  are tiny even at 100 TB ABox scale, so we collect them, close them in
-  Python, and broadcast-join the result against the instance data. This keeps
-  every ABox-sized operation a distributed broadcast join (no shuffles of the
-  big side beyond the final dedup).
-* **ABox rules as a semi-naive DataFrame fixpoint** — each iteration applies
-  every rule to the *delta* only, unions, dedups, subtracts the known set,
-  and checkpoints to truncate lineage (Pregel pattern, SURVEY §1.4).
-* **owl:sameAs as connected components** — iterative min-id label propagation
-  producing a canonical-id dictionary (B41).
+* **Schema** — the TBox (subClassOf / subPropertyOf / domain / range /
+  inverseOf / property characteristics / restrictions) is tiny even at
+  100 TB ABox scale, so :class:`Schema` collects it once and closes it on
+  the driver; every rule joins the ABox against broadcast TBox tables.
+* **One Spark step** — :func:`_stepper` builds ``step(delta, known)``: the
+  delta-only rules as broadcast joins of ``delta``, plus the delta×known
+  rules (transitive chaining, functional sameAs, someValuesFrom /
+  allValuesFrom) joined semi-naively — only pairs involving a delta fact.
+* **One semi-naive loop** — :func:`_semi_naive`: each round anti-joins the
+  step's output against ``known`` (newness key ``(s, p, o_lex)``), pins it,
+  stops when it is empty, and unions it lazily into ``known``. The closure
+  runs its own first round (the rules over the base, the path engine's
+  transitive closures, the one-shot break) and then this loop; the
+  increment is this loop seeded with the inserted delta. DRed's
+  over-delete runs the same step plus a both-sides transitive extension;
+  its re-derive pass runs the step once and hands restored facts to the
+  increment.
+* **One driver worklist** — :func:`_worklist` evaluates the same rules in
+  the same semi-naive rounds over Python indexes, with zero Spark jobs. It
+  closes ABoxes under SMALL_ABOX_QUADS and computes DRed's over-delete cone
+  for deletions under DRED_TERMS_BOUND.
+* **owl:sameAs as connected components** — iterative min-label
+  propagation, or a driver union-find (:func:`_union_find`) below
+  SMALL_CC_EDGES, producing a canonical-id dictionary (B41).
+
+No session configuration is changed at runtime: every pinned frame gets
+fresh expression ids (:func:`pin_inference`), and the bounded driver probes
+take in one job through the plan itself (:func:`_take_wide`).
 
 Implemented rule subset (declared scope in SURVEY §2.2.5): rdfs2 (domain),
 rdfs3 (range), rdfs5/7 (subPropertyOf), rdfs9/11 (subClassOf), rdfp3
@@ -31,10 +48,13 @@ Derived sameAs integrates through the B41 query-time expansion
 
 from __future__ import annotations
 
+import copy
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphdb_free_mocha_sa_spark.model import OWL, QUAD_COLS, RDF_TYPE, RDFS
+from graphdb_free_mocha_sa_spark.model import (OWL, QUAD_COLS, QUAD_SCHEMA,
+                                               RDF_TYPE, RDFS)
 
 SUBCLASS = RDFS + "subClassOf"
 SUBPROP = RDFS + "subPropertyOf"
@@ -53,6 +73,9 @@ HAS_VALUE = OWL + "hasValue"
 SOME_VALUES = OWL + "someValuesFrom"
 ALL_VALUES = OWL + "allValuesFrom"
 
+TBOX_PREDS = (SUBCLASS, SUBPROP, DOMAIN, RANGE, INVERSE, EQ_CLASS, EQ_PROP,
+              ON_PROPERTY, HAS_VALUE, SOME_VALUES, ALL_VALUES)
+
 MAX_ITERS = 50
 
 
@@ -61,28 +84,36 @@ def _take_wide(df: DataFrame, n: int):
     partition scan (1, then 4x, ...) costs 3-4 jobs to drain a small
     frame spread over many partitions — the common case for the bounded
     driver probes here, which read already-checkpointed blocks (r12 opt,
-    guide §1.2). Scoped conf, restored after the take."""
-    spark = df.sparkSession
-    key = "spark.sql.limit.initialNumPartitions"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "10000000")
-    try:
-        return df.limit(n).collect()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    guide §1.2). Collected through the RDD, the limit runs as every
+    partition's local limit plus one single-partition shuffle: one job,
+    with no session conf touched."""
+    return df.limit(n).rdd.collect()
+
+
+def _is_tbox(p: str, o_lex) -> bool:
+    """True for a fact that changes the :class:`Schema`."""
+    return p in TBOX_PREDS or (p == RDF_TYPE and o_lex in (
+        TRANSITIVE, SYMMETRIC, FUNCTIONAL, INV_FUNCTIONAL))
+
+
+def _tbox_facts(df: DataFrame) -> DataFrame:
+    """The rows of ``df`` that change the :class:`Schema` (:func:`_is_tbox`
+    as a filter)."""
+    return df.filter(F.col("p").isin(*TBOX_PREDS)
+                     | ((F.col("p") == RDF_TYPE)
+                        & F.col("o_lex").isin(TRANSITIVE, SYMMETRIC,
+                                              FUNCTIONAL, INV_FUNCTIONAL)))
 
 #: owl:AllDifferent list-walk driver probe bound: at most this many
 #: distinctMembers heads (and 8x as many list-cell triples) are walked
 #: driver-side; beyond it the distributed per-hop join walk runs instead.
 #: Module-level so tests can force the distributed path on tiny data.
 AD_LIST_BOUND = 500
-#: DRed re-derive candidate probe: when the removed-term vocabulary fits
-#: this bound, the candidate scan is one InSet-predicate pass over the
-#: world (pushdown-friendly) instead of two broadcast semi-join scans
-#: (r11 opt). Falls back to the join shape above the bound.
+#: DRed driver bound: deletions, over-delete cones and removed-term
+#: vocabularies up to this size are held on the driver — the TBox probe
+#: and the cone run on the worklist, and the re-derive candidate scan is
+#: one InSet-predicate pass over the world (r11/r12 opt). Above it the
+#: distributed key-frame and broadcast semi-join shapes run instead.
 DRED_TERMS_BOUND = 20_000
 INFERRED_GRAPH = "http://graph.inferred"
 
@@ -101,10 +132,6 @@ def _closure(pairs: set[tuple[str, str]]) -> set[tuple[str, str]]:
     return out
 
 
-def _iri_quad(g, s, p, o):
-    return (g, s, p, o, None, None, None, None)
-
-
 class Schema:
     """Driver-side TBox extracted from the quads table (or pre-collected
     rows — the small-ABox path collects once and reuses)."""
@@ -116,15 +143,7 @@ class Schema:
             # largest predicate in a real store, so collecting it
             # unrestricted would be a driver OOM at scale. This keeps the
             # collect O(TBox), independent of ABox type cardinality.
-            tbox_rows = (quads.filter(F.col("p").isin(SUBCLASS, SUBPROP, DOMAIN,
-                                                      RANGE, INVERSE, EQ_CLASS,
-                                                      EQ_PROP,
-                                                      ON_PROPERTY, HAS_VALUE,
-                                                      SOME_VALUES, ALL_VALUES)
-                                      | ((F.col("p") == RDF_TYPE)
-                                         & F.col("o_lex").isin(
-                                             TRANSITIVE, SYMMETRIC,
-                                             FUNCTIONAL, INV_FUNCTIONAL)))
+            tbox_rows = (_tbox_facts(quads)
                          .filter(F.col("o_dt").isNull()
                                  | (F.col("p") == HAS_VALUE))
                          .select("p", "s", "o_lex", "o_dt", "o_lang",
@@ -220,75 +239,103 @@ class Schema:
                            for w in sorted(ws)]
 
 
-def _rule_applier(spark: SparkSession, schema: Schema, graph: str):
-    """One-step rule application closure for a fixed (already-closed) TBox."""
+
+def _nulls():
+    """The literal-shadow columns of an IRI-object quad."""
+    return [F.lit(None).cast("string").alias("o_dt"),
+            F.lit(None).cast("string").alias("o_lang"),
+            F.lit(None).cast("double").alias("o_num"),
+            F.lit(None).cast("timestamp").alias("o_ts")]
+
+
+def _stepper(spark: SparkSession, schema: Schema, graph: str):
+    """The one Spark rule step for a fixed (driver-closed) TBox.
+
+    ``step(delta, known)`` returns every fact one rule application derives
+    with at least one premise in ``delta`` (duplicates and known facts
+    included — the caller subtracts them):
+
+    * delta-only rules, broadcast joins of ``delta`` against TBox tables:
+      rdfs9, rdfs7 (keeps literal shadows), rdfs2, rdfs3, rdfp8, rdfp3 and
+      rdfp14a/b;
+    * delta×known rules, joined in both directions: rdfp4 (skipped with
+      ``chain=False`` — the closure's first round takes whole transitive
+      closures from the path engine), rdfp1/2 and rdfp15/16.
+
+    Empty rule tables are SKIPPED, not joined-with-empty: every emitted
+    piece adds a stage to every downstream materialization of the union,
+    and the loops re-materialize it per round (r9 DRed profile).
+    """
     g = F.lit(graph)
+    table = spark.createDataFrame
+    sc_df = table(sorted(schema.subclass), "c1 string, c2 string")
+    sp_df = table(sorted(schema.subprop), "p1 string, p2 string")
+    dom_df = table(sorted(schema.domain), "dp string, dc string")
+    rng_df = table(sorted(schema.range), "rp string, rc string")
+    inv_df = table(sorted(schema.inverse), "ip1 string, ip2 string")
+    hv_df = table([(v, p) + val for (v, p, val) in schema.has_value],
+                  "hv string, hp string, w_lex string, w_dt string, "
+                  "w_lang string, w_num double, w_ts timestamp")
+    sv_df = table(schema.some_values, "v string, vp string, w string")
+    av_df = table(schema.all_values, "v string, vp string, w string")
+    # rdfp15: u p x & x type w => u type v  (joins on x, w; emits u, v)
+    # rdfp16: u p x & u type v => x type w  (joins on u, v; emits x, w)
+    restrictions = ([(sv_df, "x", "w", "u", "v")] if schema.some_values
+                    else []) + ([(av_df, "u", "v", "x", "w")]
+                                if schema.all_values else [])
+    # rdfp1 joins functional facts on the subject, rdfp2 on the object
+    same_as = ([(p, "s", "o_lex") for p in sorted(schema.functional)]
+               + [(p, "o_lex", "s") for p in sorted(schema.inv_functional)])
 
-    def df_of(pairs: set[tuple[str, str]], a: str, b: str) -> DataFrame:
-        if not pairs:
-            return spark.createDataFrame([], f"{a} string, {b} string")
-        return spark.createDataFrame(sorted(pairs), f"{a} string, {b} string")
+    def iri_quad(df, s, p, o):
+        return df.select(g.alias("g"), s.alias("s"), p.alias("p"),
+                         o.alias("o_lex"), *_nulls())
 
-    sc_df = df_of(schema.subclass, "c1", "c2")
-    sp_df = df_of(schema.subprop, "p1", "p2")
-    dom_df = df_of(schema.domain, "dp", "dc")
-    rng_df = df_of(schema.range, "rp", "rc")
-    inv_df = df_of(schema.inverse, "ip1", "ip2")
-    hv_schema = ("hv string, hp string, w_lex string, w_dt string, "
-                 "w_lang string, w_num double, w_ts timestamp")
-    hv_df = spark.createDataFrame(
-        [(v, p) + val for (v, p, val) in schema.has_value], hv_schema)
+    def edges(df, p, a, b, src="s", dst="o_lex"):
+        return (df.filter((F.col("p") == p) & F.col("o_dt").isNull())
+                .select(F.col(src).alias(a), F.col(dst).alias(b)))
 
-    def null_cols():
-        return [F.lit(None).cast("string").alias("o_dt"),
-                F.lit(None).cast("string").alias("o_lang"),
-                F.lit(None).cast("double").alias("o_num"),
-                F.lit(None).cast("timestamp").alias("o_ts")]
+    def rels(df):
+        return df.filter(F.col("o_dt").isNull()).select(
+            F.col("s").alias("u"), F.col("p").alias("rp"),
+            F.col("o_lex").alias("x"))
 
-    def apply_rules(delta: DataFrame) -> DataFrame:
+    def typed(df):
+        return df.filter(F.col("p") == RDF_TYPE).select(
+            F.col("s").alias("i"), F.col("o_lex").alias("c"))
+
+    def step(delta: DataFrame, known: DataFrame,
+             chain: bool = True) -> DataFrame:
         pieces: list[DataFrame] = []
         iri_delta = delta.filter(F.col("o_dt").isNull())
         types = delta.filter(F.col("p") == RDF_TYPE)
-
-        # empty rule tables are SKIPPED, not joined-with-empty: every
-        # emitted piece adds a stage to EVERY downstream materialization
-        # of the union, and decrement/increment re-materialize it per
-        # fixpoint iteration (r9 DRed profile)
-        # rdfs9: type(x,c1) & sc(c1,c2) => type(x,c2)
-        if schema.subclass:
-            pieces.append(types.join(F.broadcast(sc_df), types["o_lex"] == sc_df["c1"])
-                          .select(g.alias("g"), F.col("s"), F.lit(RDF_TYPE).alias("p"),
-                                  F.col("c2").alias("o_lex"), *null_cols()))
-        # rdfs7: rel(s,p1,o) & sp(p1,p2) => rel(s,p2,o)  (keeps literal shadows)
-        if schema.subprop:
-            stepped = delta.join(F.broadcast(sp_df), delta["p"] == sp_df["p1"])
-            pieces.append(stepped.select(g.alias("g"), F.col("s"),
-                                         F.col("p2").alias("p"), F.col("o_lex"),
-                                         F.col("o_dt"), F.col("o_lang"),
-                                         F.col("o_num"), F.col("o_ts")))
-        # rdfs2: rel(s,p,o) & dom(p,c) => type(s,c)
-        if schema.domain:
-            pieces.append(delta.join(F.broadcast(dom_df), delta["p"] == dom_df["dp"])
-                          .select(g.alias("g"), F.col("s"), F.lit(RDF_TYPE).alias("p"),
-                                  F.col("dc").alias("o_lex"), *null_cols()))
-        # rdfs3: rel(s,p,o) & rng(p,c) & o is IRI => type(o,c)
-        if schema.range:
-            pieces.append(iri_delta.join(F.broadcast(rng_df), iri_delta["p"] == rng_df["rp"])
-                          .select(g.alias("g"), F.col("o_lex").alias("s"),
-                                  F.lit(RDF_TYPE).alias("p"),
-                                  F.col("rc").alias("o_lex"), *null_cols()))
-        # rdfp8: rel(s,p1,o) & inv(p1,p2) => rel(o,p2,s) (IRI objects only)
-        if schema.inverse:
-            pieces.append(iri_delta.join(F.broadcast(inv_df), iri_delta["p"] == inv_df["ip1"])
-                          .select(g.alias("g"), F.col("o_lex").alias("s"),
-                                  F.col("ip2").alias("p"), F.col("s").alias("o_lex"),
-                                  *null_cols()))
-        # rdfp3: symmetric
-        if schema.symmetric:
-            sym = iri_delta.filter(F.col("p").isin(*schema.symmetric))
-            pieces.append(sym.select(g.alias("g"), F.col("o_lex").alias("s"),
-                                     F.col("p"), F.col("s").alias("o_lex"),
-                                     *null_cols()))
+        if schema.subclass:          # rdfs9: type(x,c1) & sc(c1,c2)
+            pieces.append(iri_quad(
+                types.join(F.broadcast(sc_df), types["o_lex"] == sc_df["c1"]),
+                F.col("s"), F.lit(RDF_TYPE), F.col("c2")))
+        if schema.subprop:           # rdfs7: rel(s,p1,o) & sp(p1,p2)
+            pieces.append(
+                delta.join(F.broadcast(sp_df), delta["p"] == sp_df["p1"])
+                .select(g.alias("g"), "s", F.col("p2").alias("p"), "o_lex",
+                        "o_dt", "o_lang", "o_num", "o_ts"))
+        if schema.domain:            # rdfs2: rel(s,p,o) & dom(p,c)
+            pieces.append(iri_quad(
+                delta.join(F.broadcast(dom_df), delta["p"] == dom_df["dp"]),
+                F.col("s"), F.lit(RDF_TYPE), F.col("dc")))
+        if schema.range:             # rdfs3: IRI objects only
+            pieces.append(iri_quad(
+                iri_delta.join(F.broadcast(rng_df),
+                               iri_delta["p"] == rng_df["rp"]),
+                F.col("o_lex"), F.lit(RDF_TYPE), F.col("rc")))
+        if schema.inverse:           # rdfp8: rel(s,p1,o) => rel(o,p2,s)
+            pieces.append(iri_quad(
+                iri_delta.join(F.broadcast(inv_df),
+                               iri_delta["p"] == inv_df["ip1"]),
+                F.col("o_lex"), F.col("ip2"), F.col("s")))
+        if schema.symmetric:         # rdfp3
+            pieces.append(iri_quad(
+                iri_delta.filter(F.col("p").isin(*schema.symmetric)),
+                F.col("o_lex"), F.col("p"), F.col("s")))
         if schema.has_value:
             # rdfp14a: u p w (value matches, literal or IRI) => type(u, v)
             hits = delta.join(
@@ -297,34 +344,58 @@ def _rule_applier(spark: SparkSession, schema: Schema, graph: str):
                 & (delta["o_lex"] == hv_df["w_lex"])
                 & delta["o_dt"].eqNullSafe(hv_df["w_dt"])
                 & delta["o_lang"].eqNullSafe(hv_df["w_lang"]))
-            pieces.append(hits.select(g.alias("g"), F.col("s"),
-                                      F.lit(RDF_TYPE).alias("p"),
-                                      F.col("hv").alias("o_lex"),
-                                      *null_cols()))
+            pieces.append(iri_quad(hits, F.col("s"), F.lit(RDF_TYPE),
+                                   F.col("hv")))
             # rdfp14b: type(u, v) => u p w (carries the value's shadows)
-            typed = types.join(F.broadcast(hv_df),
-                               types["o_lex"] == hv_df["hv"])
-            pieces.append(typed.select(g.alias("g"), F.col("s"),
-                                       F.col("hp").alias("p"),
-                                       F.col("w_lex").alias("o_lex"),
-                                       F.col("w_dt").alias("o_dt"),
-                                       F.col("w_lang").alias("o_lang"),
-                                       F.col("w_num").alias("o_num"),
-                                       F.col("w_ts").alias("o_ts")))
+            pieces.append(
+                types.join(F.broadcast(hv_df), types["o_lex"] == hv_df["hv"])
+                .select(g.alias("g"), "s", F.col("hp").alias("p"),
+                        F.col("w_lex").alias("o_lex"),
+                        F.col("w_dt").alias("o_dt"),
+                        F.col("w_lang").alias("o_lang"),
+                        F.col("w_num").alias("o_num"),
+                        F.col("w_ts").alias("o_ts")))
+        for p in sorted(schema.transitive) if chain else ():
+            # rdfp4: delta edges extend known chains on both sides
+            d, k = edges(delta, p, "ds", "do"), edges(known, p, "ks", "ko")
+            fwd = d.join(k, F.col("do") == F.col("ks")).select(
+                F.col("ds").alias("s"), F.col("ko").alias("o_lex"))
+            bwd = k.join(d, F.col("ko") == F.col("ds")).select(
+                F.col("ks").alias("s"), F.col("do").alias("o_lex"))
+            pieces.append(iri_quad(fwd.unionByName(bwd).dropDuplicates(),
+                                   F.col("s"), F.lit(p), F.col("o_lex")))
+        for p, key, val in same_as:
+            # rdfp1/rdfp2: colliding values are sameAs, both directions
+            d = edges(delta, p, "dk", "dv", key, val)
+            k = edges(known, p, "kk", "kv", key, val)
+            hit = (d.join(k, F.col("dk") == F.col("kk"))
+                   .filter(F.col("dv") != F.col("kv"))
+                   .select(F.col("dv").alias("s"), F.col("kv").alias("o_lex")))
+            both = hit.unionByName(hit.select(F.col("o_lex").alias("s"),
+                                              F.col("s").alias("o_lex")))
+            pieces.append(iri_quad(both.dropDuplicates(), F.col("s"),
+                                   F.lit(SAMEAS), F.col("o_lex")))
+        for tbl, node, cls, s, o in restrictions:
+            # rdfp15/16: delta rels × known types + known rels × delta types
+            for rel_side, type_side in ((rels(delta), typed(known)),
+                                        (rels(known), typed(delta))):
+                cand = rel_side.join(F.broadcast(tbl),
+                                     rel_side["rp"] == tbl["vp"])
+                hit = cand.join(type_side, (cand[node] == type_side["i"])
+                                & (cand[cls] == type_side["c"]))
+                pieces.append(iri_quad(hit, F.col(s), F.lit(RDF_TYPE),
+                                       F.col(o)))
         if not pieces:
-            # empty TBox: no rule can fire. FRESH LocalRelation, not
-            # delta.filter(False) — reusing delta's attribute ids trips
-            # Spark 4.1's Union constraint rewrite ("key not found: p#N")
-            # when the caller unions this with other delta-derived pieces
-            # and checkpoints (same hazard the decrement _pin documents)
-            from graphdb_free_mocha_sa_spark.model import QUAD_SCHEMA
-            return spark.createDataFrame([], QUAD_SCHEMA).select(*QUAD_COLS)
+            # FRESH LocalRelation, not delta.filter(False): reusing delta's
+            # attribute ids trips Spark 4.1's Union constraint rewrite
+            # ("key not found: p#N") once the caller unions and pins it
+            return spark.createDataFrame([], QUAD_SCHEMA)
         out = pieces[0]
         for piece in pieces[1:]:
             out = out.unionByName(piece)
         return out.select(*QUAD_COLS)
 
-    return apply_rules
+    return step
 
 
 def _anti_known(new: DataFrame, known: DataFrame) -> DataFrame:
@@ -335,313 +406,186 @@ def _anti_known(new: DataFrame, known: DataFrame) -> DataFrame:
                   & (F.col("o_lex") == F.col("__ko")), "left_anti"))
 
 
-def _trans_step(delta: DataFrame, known: DataFrame, props, graph: str) -> DataFrame | None:
-    """One transitive-chaining step: delta edges extend known chains on both
-    sides (semi-naive: only chains through the delta are recomputed)."""
-    g = F.lit(graph)
-    out = None
-    for p in sorted(props):
-        d = delta.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
-                 .select(F.col("s").alias("ds"), F.col("o_lex").alias("do"))
-        k = known.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
-                 .select(F.col("s").alias("ks"), F.col("o_lex").alias("ko"))
-        fwd = d.join(k, F.col("do") == F.col("ks")).select(
-            F.col("ds").alias("s"), F.col("ko").alias("o_lex"))
-        bwd = k.join(d, F.col("ko") == F.col("ds")).select(
-            F.col("ks").alias("s"), F.col("do").alias("o_lex"))
-        both = fwd.unionByName(bwd).dropDuplicates().select(
-            g.alias("g"), "s", F.lit(p).alias("p"), "o_lex",
-            F.lit(None).cast("string").alias("o_dt"),
-            F.lit(None).cast("string").alias("o_lang"),
-            F.lit(None).cast("double").alias("o_num"),
-            F.lit(None).cast("timestamp").alias("o_ts")).select(*QUAD_COLS)
-        out = both if out is None else out.unionByName(both)
-    return out
+def pin_inference(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """localCheckpoint an inference frame under FRESH expression ids. A
+    checkpoint keeps its source plan's attribute ids, and Spark 4.1's
+    Union constraint rewrite throws "key not found" on unions of pinned
+    frames that share them; re-aliasing every column first gives each
+    pinned frame ids of its own — a fix inside the plan, so no session
+    conf is switched off around it."""
+    return df.select([F.col(c).alias(c) for c in df.columns]) \
+             .localCheckpoint()
 
 
-def _functional_step(delta: DataFrame, known: DataFrame, schema: Schema,
-                     graph: str) -> DataFrame | None:
-    """rdfp1/rdfp2: functional / inverse-functional properties derive
-    owl:sameAs between the colliding values (IRI terms only — literal
-    identity is value equality, not sameAs). Like transitive chaining this
-    is a delta×known rule: only pairs involving a delta fact are recomputed
-    per iteration. Derived sameAs quads integrate through the engine's
-    query-time sameAs expansion (B41), which also supplies symmetry/
-    transitivity via connected components."""
-    if not schema.functional and not schema.inv_functional:
-        return None
-    g = F.lit(graph)
-
-    def quads_of(pairs: DataFrame) -> DataFrame:
-        both = pairs.unionByName(pairs.select(
-            F.col("o_lex").alias("s"), F.col("s").alias("o_lex")))
-        return both.dropDuplicates().select(
-            g.alias("g"), "s", F.lit(SAMEAS).alias("p"), "o_lex",
-            F.lit(None).cast("string").alias("o_dt"),
-            F.lit(None).cast("string").alias("o_lang"),
-            F.lit(None).cast("double").alias("o_num"),
-            F.lit(None).cast("timestamp").alias("o_ts")).select(*QUAD_COLS)
-
-    out = None
-    for p in sorted(schema.functional):
-        d = delta.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
-                 .select(F.col("s").alias("dk"), F.col("o_lex").alias("dv"))
-        k = known.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
-                 .select(F.col("s").alias("kk"), F.col("o_lex").alias("kv"))
-        pairs = (d.join(k, F.col("dk") == F.col("kk"))
-                 .filter(F.col("dv") != F.col("kv"))
-                 .select(F.col("dv").alias("s"), F.col("kv").alias("o_lex")))
-        q = quads_of(pairs)
-        out = q if out is None else out.unionByName(q)
-    for p in sorted(schema.inv_functional):
-        d = delta.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
-                 .select(F.col("o_lex").alias("dk"), F.col("s").alias("dv"))
-        k = known.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
-                 .select(F.col("o_lex").alias("kk"), F.col("s").alias("kv"))
-        pairs = (d.join(k, F.col("dk") == F.col("kk"))
-                 .filter(F.col("dv") != F.col("kv"))
-                 .select(F.col("dv").alias("s"), F.col("kv").alias("o_lex")))
-        q = quads_of(pairs)
-        out = q if out is None else out.unionByName(q)
-    return out
+def _round(spark: SparkSession, new: DataFrame,
+           known: DataFrame) -> DataFrame | None:
+    """One semi-naive round's bookkeeping: the candidates whose
+    ``(s, p, o_lex)`` is not yet known, pinned; ``None`` when none is."""
+    new = pin_inference(spark, _anti_known(new, known))
+    return None if new.isEmpty() else new
 
 
-def _restriction_step(spark: SparkSession, delta: DataFrame, known: DataFrame,
-                      schema: Schema, graph: str) -> DataFrame | None:
-    """rdfp15/rdfp16 — the two-ABox-antecedent restriction rules, evaluated
-    semi-naively (delta×known in both directions, like transitive chaining):
-
-    * rdfp15: ``v someValuesFrom w ∧ v onProperty p ∧ u p x ∧ x type w``
-      ⇒ ``u type v``
-    * rdfp16: ``v allValuesFrom w ∧ v onProperty p ∧ u type v ∧ u p x``
-      ⇒ ``x type w``
-
-    The restriction tables are TBox-sized and broadcast; each rule is two
-    broadcast joins + one equi-join keyed on the shared ABox term, so the
-    big side shuffles once per iteration at most.
-    """
-    if not schema.some_values and not schema.all_values:
-        return None
-    g = F.lit(graph)
-
-    def nulls():
-        return [F.lit(None).cast("string").alias("o_dt"),
-                F.lit(None).cast("string").alias("o_lang"),
-                F.lit(None).cast("double").alias("o_num"),
-                F.lit(None).cast("timestamp").alias("o_ts")]
-
-    def rels(df):
-        return df.filter(F.col("o_dt").isNull()) \
-                 .select(F.col("s").alias("u"), F.col("p").alias("rp"),
-                         F.col("o_lex").alias("x"))
-
-    def types(df):
-        return df.filter(F.col("p") == RDF_TYPE) \
-                 .select(F.col("s").alias("i"), F.col("o_lex").alias("c"))
-
-    out = None
-
-    def emit(piece):
-        nonlocal out
-        piece = piece.select(g.alias("g"), "s", F.lit(RDF_TYPE).alias("p"),
-                             "o_lex", *nulls()).select(*QUAD_COLS)
-        out = piece if out is None else out.unionByName(piece)
-
-    if schema.some_values:
-        sv_df = spark.createDataFrame(schema.some_values,
-                                      "v string, vp string, w string")
-        # delta rel × known types   +   known rels × delta types
-        for rel_side, type_side in ((rels(delta), types(known)),
-                                    (rels(known), types(delta))):
-            cand = rel_side.join(F.broadcast(sv_df),
-                                 rel_side["rp"] == sv_df["vp"])
-            hit = cand.join(type_side, (cand["x"] == type_side["i"])
-                            & (cand["w"] == type_side["c"]))
-            emit(hit.select(F.col("u").alias("s"), F.col("v").alias("o_lex")))
-    if schema.all_values:
-        av_df = spark.createDataFrame(schema.all_values,
-                                      "v string, vp string, w string")
-        for rel_side, type_side in ((rels(delta), types(known)),
-                                    (rels(known), types(delta))):
-            cand = rel_side.join(F.broadcast(av_df),
-                                 rel_side["rp"] == av_df["vp"])
-            hit = cand.join(type_side, (cand["u"] == type_side["i"])
-                            & (cand["v"] == type_side["c"]))
-            emit(hit.select(F.col("x").alias("s"), F.col("w").alias("o_lex")))
-    return out
+def _semi_naive(spark: SparkSession, step, delta: DataFrame,
+                known: DataFrame) -> DataFrame | None:
+    """The one semi-naive fixpoint: apply ``step`` to the last round's new
+    facts until a round derives nothing. ``known`` grows as a LAZY union
+    of pinned pieces (r11 opt, guide §2.4): re-checkpointing known ∪ new
+    copied the whole closure every round, and each piece is pinned, so
+    scanning the union reads blocks without recomputation. Returns the
+    lazy union of every new fact, or ``None`` when there is none."""
+    inferred = None
+    for _ in range(MAX_ITERS):
+        new = _round(spark, step(delta, known), known)
+        if new is None:
+            return inferred
+        inferred = new if inferred is None else inferred.unionByName(new)
+        known = known.unionByName(new)
+        delta = new
+    raise RuntimeError(f"inference did not converge in {MAX_ITERS} iterations")
 
 
 #: below this quad count the whole forward-chaining fixpoint runs on the
-#: driver — a semi-naive worklist over Python dicts. A Spark fixpoint over a
-#: few thousand rows is pure job-scheduling overhead (the same adaptive
-#: philosophy as paths.SMALL_GRAPH_EDGES and the engine's ENCODE_MIN_QUADS);
-#: the distributed path below is for ABoxes that need it.
+#: driver worklist. A Spark fixpoint over a few thousand rows is pure
+#: job-scheduling overhead (the same adaptive philosophy as
+#: paths.SMALL_GRAPH_EDGES and the engine's ENCODE_MIN_QUADS); the
+#: distributed path is for ABoxes that need it.
 SMALL_ABOX_QUADS = 50_000
 #: safety valve: if the driver-side closure blows past this many inferred
 #: facts (pathological transitive chains), abandon it and run distributed.
 SMALL_ABOX_MAX_INFERRED = 2_000_000
 
 
-def _closure_small_abox(spark: SparkSession, rows, graph: str) -> DataFrame | None:
-    """Driver-side OWL-Horst fixpoint for ABoxes under SMALL_ABOX_QUADS.
+def _delta_only_rules(schema: Schema) -> bool:
+    """True when every rule the schema can fire is a pure delta×TBox rule
+    (rdfs2/3/7/9, rdfp3/8/14a/14b) — computable from a fact and the
+    driver-closed schema alone. The transitive / functional / restriction
+    (rdfp15/16) rules join against the KNOWN world."""
+    return not (schema.transitive or schema.functional
+                or schema.inv_functional or schema.some_values
+                or schema.all_values)
 
-    Semantically identical to the distributed fixpoint: same rule set, same
-    newness key (s, p, o_lex) as :func:`_anti_known`, base facts seed the
-    known set so re-derivations of asserted facts are not reported. Returns
-    ``None`` if the inferred set exceeds SMALL_ABOX_MAX_INFERRED (caller
-    falls back to the distributed path).
+
+def _worklist(schema: Schema, seed_rows, bound: int) -> list | None:
+    """The one driver-side Horst evaluator: the rules of :func:`_stepper`
+    in the rounds of :func:`_semi_naive`, over Python indexes — zero Spark
+    jobs. Because ``schema.subclass`` / ``subprop`` are transitively
+    closed, the round count is the rule INTERACTION depth, not the
+    hierarchy depth.
+
+    ``seed_rows`` are ``(s, p, o_lex, o_dt, o_lang, o_num, o_ts)`` facts.
+    Every distinct one is known and fires its rules: two seeds that differ
+    only in o_dt/o_lang match different rules. A derived fact is new when
+    its ``(s, p, o_lex)`` key is — the newness key of :func:`_anti_known`
+    — and every variant of a key first derived in one round is kept, as
+    the distributed anti-join keeps them. Returns the derived facts, or
+    ``None`` once more than ``bound`` are derived (the caller falls back
+    to Spark).
+
+    Serves the small-ABox closure (seeds: the whole base) and DRed's
+    over-delete cone (seeds: the deleted facts; only when
+    :func:`_delta_only_rules`, since the delta×known rules need the
+    whole world in the indexes). The cone is a sound over-approximation:
+    anything over-deleted beyond the true cone is restored by re-derive.
     """
-    from collections import deque
+    def index(pairs):
+        out: dict = {}
+        for a, b in pairs:
+            out.setdefault(a, []).append(b)
+        return out
 
-    sch = Schema(tbox_rows=[
-        r for r in rows
-        if (r["p"] in (SUBCLASS, SUBPROP, DOMAIN, RANGE, INVERSE,
-                       EQ_CLASS, EQ_PROP, RDF_TYPE,
-                       ON_PROPERTY, SOME_VALUES, ALL_VALUES)
-            and r["o_dt"] is None)
-        or r["p"] == HAS_VALUE])
-    sc_map: dict = {}
-    sp_map: dict = {}
-    dom_map: dict = {}
-    rng_map: dict = {}
-    inv_map: dict = {}
-    for a, b in sch.subclass:
-        sc_map.setdefault(a, set()).add(b)
-    for a, b in sch.subprop:
-        sp_map.setdefault(a, set()).add(b)
-    for a, b in sch.domain:
-        dom_map.setdefault(a, set()).add(b)
-    for a, b in sch.range:
-        rng_map.setdefault(a, set()).add(b)
-    for a, b in sch.inverse:
-        inv_map.setdefault(a, set()).add(b)
-    trans_fwd: dict = {p: {} for p in sch.transitive}
-    trans_bwd: dict = {p: {} for p in sch.transitive}
-    func_vals: dict = {p: {} for p in sch.functional}      # p -> s -> {o}
-    invfunc_subjs: dict = {p: {} for p in sch.inv_functional}  # p -> o -> {s}
-    # restriction-rule indexes (rdfp14a/b/15/16)
-    hv_by_pval: dict = {}   # (p, o_lex, o_dt, o_lang) -> {restriction v}
-    hv_by_class: dict = {}  # v -> [(p, value-tuple)]
-    for v, p, val in sch.has_value:
-        hv_by_pval.setdefault((p, val[0], val[1], val[2]), set()).add(v)
-        hv_by_class.setdefault(v, []).append((p, val))
-    sv_by_prop: dict = {}   # p -> [(v, w)]
-    sv_by_class: dict = {}  # w -> [(v, p)]
-    for v, p, w in sch.some_values:
-        sv_by_prop.setdefault(p, []).append((v, w))
-        sv_by_class.setdefault(w, []).append((v, p))
-    av_by_class: dict = {}  # v -> [(p, w)]
-    av_by_prop: dict = {}   # p -> [(v, w)]
-    for v, p, w in sch.all_values:
-        av_by_class.setdefault(v, []).append((p, w))
-        av_by_prop.setdefault(p, []).append((v, w))
-    rest_props = set(sv_by_prop) | set(av_by_prop)
-    prop_fwd: dict = {p: {} for p in rest_props}  # p -> u -> {x}
-    prop_bwd: dict = {p: {} for p in rest_props}  # p -> x -> {u}
-    types_of: dict = {}                           # node -> {class}
-
-    known: set = set()
-    inferred: list = []
-    queue: deque = deque()
-
-    def add(fact, base=False):
-        # fact = (s, p, o_lex, o_dt, o_lang, o_num, o_ts)
-        key = fact[:3]
-        if key in known:
-            return
-        known.add(key)
-        queue.append(fact)
-        if not base:
-            inferred.append(fact)
-        s, p, o_lex, o_dt = fact[0], fact[1], fact[2], fact[3]
-        if o_dt is None and p in trans_fwd:
-            trans_fwd[p].setdefault(s, set()).add(o_lex)
-            trans_bwd[p].setdefault(o_lex, set()).add(s)
-        if o_dt is None and p in func_vals:
-            func_vals[p].setdefault(s, set()).add(o_lex)
-        if o_dt is None and p in invfunc_subjs:
-            invfunc_subjs[p].setdefault(o_lex, set()).add(s)
-        if o_dt is None and p == RDF_TYPE:
-            types_of.setdefault(s, set()).add(o_lex)
-        if o_dt is None and p in prop_fwd:
-            prop_fwd[p].setdefault(s, set()).add(o_lex)
-            prop_bwd[p].setdefault(o_lex, set()).add(s)
-
-    for r in rows:
-        add((r["s"], r["p"], r["o_lex"], r["o_dt"], r["o_lang"],
-             r["o_num"], r["o_ts"]), base=True)
-
+    sc, sp = index(schema.subclass), index(schema.subprop)
+    dom, rng, inv = (index(schema.domain), index(schema.range),
+                     index(schema.inverse))
+    hv_by_val = index(((p,) + val[:3], v) for v, p, val in schema.has_value)
+    hv_by_class = index((v, (p, val)) for v, p, val in schema.has_value)
+    sv_by_prop = index((p, (v, w)) for v, p, w in schema.some_values)
+    sv_by_class = index((w, (v, p)) for v, p, w in schema.some_values)
+    av_by_prop = index((p, (v, w)) for v, p, w in schema.all_values)
+    av_by_class = index((v, (p, w)) for v, p, w in schema.all_values)
+    joined = (schema.transitive | schema.functional | schema.inv_functional
+              | set(sv_by_prop) | set(av_by_prop))
+    fwd: dict = {p: {} for p in joined}     # p -> s -> {o}  (IRI objects)
+    bwd: dict = {p: {} for p in joined}     # p -> o -> {s}
+    types_of: dict = {}                     # node -> {class}
+    known: set = set()                      # (s, p, o_lex)
+    fresh: dict = {}                        # this round's new facts
     nulls = (None, None, None, None)
-    while queue:
-        if len(inferred) > SMALL_ABOX_MAX_INFERRED:
-            return None
-        s, p, o_lex, o_dt, o_lang, o_num, o_ts = queue.popleft()
-        is_iri = o_dt is None
-        # rdfp14a: u p w (value match incl. literals) => type(u, v)
-        for v in hv_by_pval.get((p, o_lex, o_dt, o_lang), ()):
-            add((s, RDF_TYPE, v) + nulls)
-        # rdfs9: type(x,c1) & sc(c1,c2) => type(x,c2)
-        if p == RDF_TYPE:
-            for c2 in sc_map.get(o_lex, ()):
-                add((s, RDF_TYPE, c2) + nulls)
-            # rdfp14b: type(u, v) & v hasValue w / onProperty p' => u p' w
-            for hp, val in hv_by_class.get(o_lex, ()):
-                add((s, hp) + val)
-            # rdfp15 (type side): x type w closes u p x chains into type(u,v)
-            for v, sp2 in sv_by_class.get(o_lex, ()):
-                for u in prop_bwd.get(sp2, {}).get(s, ()):
-                    add((u, RDF_TYPE, v) + nulls)
-            # rdfp16 (type side): u type v pushes w onto every u p x
-            for ap, w in av_by_class.get(o_lex, ()):
-                for x in prop_fwd.get(ap, {}).get(s, ()):
-                    add((x, RDF_TYPE, w) + nulls)
-        # rdfs7: rel(s,p1,o) & sp(p1,p2) => rel(s,p2,o) (keeps literal shadow)
-        for p2 in sp_map.get(p, ()):
-            add((s, p2, o_lex, o_dt, o_lang, o_num, o_ts))
-        # rdfs2: rel(s,p,o) & dom(p,c) => type(s,c)
-        for c in dom_map.get(p, ()):
-            add((s, RDF_TYPE, c) + nulls)
-        if is_iri:
-            # rdfs3: rng    rdfp8: inverseOf    rdfp3: symmetric
-            for c in rng_map.get(p, ()):
-                add((o_lex, RDF_TYPE, c) + nulls)
-            for p2 in inv_map.get(p, ()):
-                add((o_lex, p2, s) + nulls)
-            if p in sch.symmetric:
-                add((o_lex, p, s) + nulls)
-            # rdfp4: chain through the current closure on both sides
-            if p in trans_fwd:
-                for x in list(trans_fwd[p].get(o_lex, ())):
-                    add((s, p, x) + nulls)
-                for y in list(trans_bwd[p].get(s, ())):
-                    add((y, p, o_lex) + nulls)
-            # rdfp1: functional — colliding values are sameAs
-            if p in func_vals:
-                for other in list(func_vals[p].get(s, ())):
-                    if other != o_lex:
-                        add((o_lex, SAMEAS, other) + nulls)
-                        add((other, SAMEAS, o_lex) + nulls)
-            # rdfp2: inverse-functional — colliding subjects are sameAs
-            if p in invfunc_subjs:
-                for other in list(invfunc_subjs[p].get(o_lex, ())):
-                    if other != s:
-                        add((s, SAMEAS, other) + nulls)
-                        add((other, SAMEAS, s) + nulls)
-            # rdfp15 (rel side): u p x & x type w => type(u, v)
-            if p in sv_by_prop:
-                for v, w in sv_by_prop[p]:
-                    if w in types_of.get(o_lex, ()):
-                        add((s, RDF_TYPE, v) + nulls)
-            # rdfp16 (rel side): u p x & u type v => type(x, w)
-            if p in av_by_prop:
-                for v, w in av_by_prop[p]:
-                    if v in types_of.get(s, ()):
-                        add((o_lex, RDF_TYPE, w) + nulls)
 
-    from graphdb_free_mocha_sa_spark.model import QUAD_SCHEMA
-    out_rows = [(graph,) + f for f in inferred]
-    return spark.createDataFrame(out_rows, QUAD_SCHEMA) if out_rows \
-        else spark.createDataFrame([], QUAD_SCHEMA)
+    def learn(f):
+        s, p, o, dt = f[:4]
+        known.add((s, p, o))
+        if dt is None and p in fwd:
+            fwd[p].setdefault(s, set()).add(o)
+            bwd[p].setdefault(o, set()).add(s)
+        if dt is None and p == RDF_TYPE:
+            types_of.setdefault(s, set()).add(o)
+
+    def emit(s, p, o, shadow=nulls):
+        if (s, p, o) not in known:
+            fresh[(s, p, o) + shadow] = None
+
+    def fire(f):
+        s, p, o, dt, lang = f[:5]
+        for v in hv_by_val.get((p, o, dt, lang), ()):       # rdfp14a
+            emit(s, RDF_TYPE, v)
+        if p == RDF_TYPE:
+            for c in sc.get(o, ()):                         # rdfs9
+                emit(s, RDF_TYPE, c)
+            for hp, val in hv_by_class.get(o, ()):          # rdfp14b
+                emit(s, hp, val[0], val[1:])
+            for v, rp in sv_by_class.get(o, ()):            # rdfp15 (type)
+                for u in bwd[rp].get(s, ()):
+                    emit(u, RDF_TYPE, v)
+            for rp, w in av_by_class.get(o, ()):            # rdfp16 (type)
+                for x in fwd[rp].get(s, ()):
+                    emit(x, RDF_TYPE, w)
+        for p2 in sp.get(p, ()):                            # rdfs7
+            emit(s, p2, o, f[3:])
+        for c in dom.get(p, ()):                            # rdfs2
+            emit(s, RDF_TYPE, c)
+        if dt is not None:
+            return
+        for c in rng.get(p, ()):                            # rdfs3
+            emit(o, RDF_TYPE, c)
+        for p2 in inv.get(p, ()):                           # rdfp8
+            emit(o, p2, s)
+        if p in schema.symmetric:                           # rdfp3
+            emit(o, p, s)
+        if p in schema.transitive:                          # rdfp4
+            for x in fwd[p].get(o, ()):
+                emit(s, p, x)
+            for y in bwd[p].get(s, ()):
+                emit(y, p, o)
+        if p in schema.functional:                          # rdfp1
+            for other in fwd[p].get(s, ()):
+                if other != o:
+                    emit(o, SAMEAS, other)
+                    emit(other, SAMEAS, o)
+        if p in schema.inv_functional:                      # rdfp2
+            for other in bwd[p].get(o, ()):
+                if other != s:
+                    emit(s, SAMEAS, other)
+                    emit(other, SAMEAS, s)
+        for v, w in sv_by_prop.get(p, ()):                  # rdfp15 (rel)
+            if w in types_of.get(o, ()):
+                emit(s, RDF_TYPE, v)
+        for v, w in av_by_prop.get(p, ()):                  # rdfp16 (rel)
+            if v in types_of.get(s, ()):
+                emit(o, RDF_TYPE, w)
+
+    frontier = list(dict.fromkeys(seed_rows))
+    derived: list = []
+    while frontier:
+        for f in frontier:
+            learn(f)
+        for f in frontier:
+            fire(f)
+            if len(derived) + len(fresh) > bound:
+                return None
+        frontier = list(fresh)
+        fresh.clear()
+        derived += frontier
+    return derived
 
 
 def owl_horst_closure(spark: SparkSession, quads: DataFrame,
@@ -650,85 +594,35 @@ def owl_horst_closure(spark: SparkSession, quads: DataFrame,
 
     Queries then read ``quads ∪ inferred`` (SURVEY §1.4 'quads_inferred').
     """
-    # bounded COUNT first (r11 opt): the old probe collected up to 50k+1
-    # rows to the driver just to learn "too big" on every distributed-path
-    # materialization; the count moves no rows, and small stores pay one
-    # extra tiny job before the collect they needed anyway. Probed up to
-    # the repartition threshold so _closure_body reuses the SAME number
-    # instead of re-counting the pinned base (r12 opt, one job less).
+    # bounded COUNT first (r11 opt): it moves no rows, and it is probed up
+    # to the repartition threshold so the distributed path reuses the
+    # number instead of re-counting the pinned base (r12 opt)
     n_probe = quads.limit(_CLOSURE_SMALL_PARTS_ROWS + 1).count()
     if n_probe <= SMALL_ABOX_QUADS:
-        head = quads.select(*QUAD_COLS).collect()
-        small = _closure_small_abox(spark, head, graph)
-        if small is not None:
-            return small
-    # same Spark 4.1 Union-constraint-rewrite hazard as the decrement
-    # (checkpointing rule-piece unions can throw "key not found: p#N";
-    # which shapes trip it depends on which rule branches are present —
-    # the r9 branch pruning exposed it here on fuzz seed 7)
-    cp_key = "spark.sql.constraintPropagation.enabled"
-    cp_prev = spark.conf.get(cp_key, "true")
-    spark.conf.set(cp_key, "false")
-    try:
-        return _closure_body(spark, quads, graph, n_probe=n_probe)
-    finally:
-        spark.conf.set(cp_key, cp_prev)
-
-
-#: below this base size the fixpoint narrows to 4 partitions (wide shuffles
-#: don't amortize); also the bound of the closure entry probe, so the body
-#: can reuse the probed count instead of re-counting
-_CLOSURE_SMALL_PARTS_ROWS = 100_000
-
-
-def _closure_body(spark: SparkSession, quads: DataFrame,
-                  graph: str, n_probe: int | None = None) -> DataFrame:
+        head = quads.select(*QUAD_COLS[1:]).collect()    # all but g
+        schema = Schema(tbox_rows=[
+            r for r in head if _is_tbox(r["p"], r["o_lex"])
+            and (r["o_dt"] is None or r["p"] == HAS_VALUE)])
+        got = _worklist(schema, [tuple(r) for r in head],
+                        SMALL_ABOX_MAX_INFERRED)
+        if got is not None:
+            return spark.createDataFrame([(graph,) + f for f in got],
+                                         QUAD_SCHEMA)
     schema = Schema(quads)
-    g = F.lit(graph)
-    apply_rules = _rule_applier(spark, schema, graph)
-
-    # transitive properties: closure per property via the path engine
-    trans_pieces: list[DataFrame] = []
-    if schema.transitive:
-        from graphdb_free_mocha_sa_spark.operators.paths import transitive_closure, _link
-        for p in sorted(schema.transitive):
-            closed = transitive_closure(_link(quads, p, None))
-            trans_pieces.append(closed.select(
-                g.alias("g"), F.col("s"), F.lit(p).alias("p"),
-                F.col("o__lex").alias("o_lex"), F.col("o__dt").alias("o_dt"),
-                F.col("o__lang").alias("o_lang"), F.col("o__num").alias("o_num"),
-                F.col("o__ts").alias("o_ts")))
-
-    # small ABoxes don't amortize wide shuffles per iteration (cf.
-    # paths.py). The entry probe already bounded-counted the base up to
-    # this threshold — reuse it: one checkpoint of the base instead of
-    # checkpoint → count → re-checkpoint (r12 opt, 3 jobs → 1).
-    known = quads.select(*QUAD_COLS)
-    if n_probe is None:
-        n_probe = known.limit(_CLOSURE_SMALL_PARTS_ROWS + 1).count()
-    if n_probe < _CLOSURE_SMALL_PARTS_ROWS:
-        known = known.repartition(4)
-    known = known.localCheckpoint()
-    # `known` accumulates as a LAZY union of pinned pieces (r11 opt,
-    # guide §2.4): the old per-iteration known.unionByName(new)
-    # .localCheckpoint() re-materialized the ENTIRE known set every
-    # iteration — O(closure) copied per step, and at cluster scale a
-    # full-store copy per iteration. Each piece is itself checkpointed,
-    # so scanning the union reads pinned blocks without recomputation.
-    # One-shot fixpoint (r12 opt): when the only rules are rdfs2/3/7/9
-    # over the driver-CLOSED subclass/subprop relations — no transitive /
-    # functional / restriction / inverse / symmetric / hasValue machinery,
-    # and rdf:type itself is not a subproperty source or target — every
-    # derivation normal-forms to base →(sp*) rel →(dom/rng) type →(sc*)
-    # type. Pre-composing domain/range across sp* and sc* on the driver
-    # makes ONE rule application complete, so the confirm iteration (a
-    # full re-derivation that learns "nothing new") is skipped. Verified
-    # by the inference fuzzers (materialize-vs-reference) and the W3C
-    # entailment suite.
-    one_shot = (_driver_cone_rules_ok(schema) and not schema.inverse
+    # One-shot closure (r12 opt): when the only rules are rdfs2/3/7/9 over
+    # the driver-CLOSED subclass/subprop relations, and rdf:type is neither
+    # a subproperty endpoint nor a domain/range key (either would re-fire
+    # rules on the types they emit), every derivation normal-forms to
+    # base →(sp*) rel →(dom/rng) type →(sc*) type. Pre-composing
+    # domain/range across sp* and sc* on the driver makes ONE rule
+    # application complete, so the confirm round (a full re-derivation
+    # that learns "nothing new") is skipped.
+    one_shot = (_delta_only_rules(schema) and not schema.inverse
                 and not schema.symmetric and not schema.has_value
-                and RDF_TYPE not in {a for a, _ in schema.subprop}
-                and RDF_TYPE not in {b for _, b in schema.subprop})
+                and RDF_TYPE not in {x for pair in schema.subprop
+                                     for x in pair}
+                and RDF_TYPE not in {p for p, _ in
+                                     schema.domain | schema.range})
     if one_shot and (schema.domain or schema.range):
         def _compose(tbl):
             # p1 ⊑* p2 fires p2's domain/range on p1-facts …
@@ -739,60 +633,52 @@ def _closure_body(spark: SparkSession, quads: DataFrame,
             eff |= {(p, c2) for (p, c) in eff
                     for (c1, c2) in schema.subclass if c1 == c}
             return eff
-        import copy as _copy
-        schema = _copy.copy(schema)
+        schema = copy.copy(schema)
         schema.domain = _compose(schema.domain)
         schema.range = _compose(schema.range)
-        apply_rules = _rule_applier(spark, schema, graph)
+    step = _stepper(spark, schema, graph)
 
-    known_parts = [known]
-    inferred = None
-    delta = known
-    for i in range(MAX_ITERS):
-        new = apply_rules(delta)
-        if trans_pieces and i == 0:
-            for tp in trans_pieces:
-                new = new.unionByName(tp)
-        elif i > 0:
-            # rdfp4 completeness: transitive-property edges DERIVED during the
-            # fixpoint (via subPropertyOf/inverseOf/symmetry) must keep
-            # chaining — mirror owl_horst_increment's per-iteration step
-            ts = _trans_step(delta, known, schema.transitive, graph)
-            if ts is not None:
-                new = new.unionByName(ts)
-        fs = _functional_step(delta, known, schema, graph)
-        if fs is not None:
-            new = new.unionByName(fs)
-        rs = _restriction_step(spark, delta, known, schema, graph)
-        if rs is not None:
-            new = new.unionByName(rs)
-        new = _anti_known(new, known).localCheckpoint()
-        if new.isEmpty():
-            break
-        inferred = new if inferred is None else inferred.unionByName(new)
-        if one_shot:
-            break                # composed rules are complete in one step
-        known_parts.append(new)
-        known = known_parts[0]
-        for kp in known_parts[1:]:
-            known = known.unionByName(kp)
-        delta = new
-    else:
-        raise RuntimeError(f"inference did not converge in {MAX_ITERS} iterations")
-
+    # small ABoxes don't amortize wide shuffles per round (cf. paths.py)
+    known = quads.select(*QUAD_COLS)
+    if n_probe < _CLOSURE_SMALL_PARTS_ROWS:
+        known = known.repartition(4)
+    known = known.localCheckpoint()
+    # first round: the rules over the base, with rdfp4 taken as whole
+    # per-property closures of the IRI-object edges from the path engine
+    # (a p+ path would also end at literals, which rdfp4 never chains to)
+    first = step(known, known, chain=False)
+    if schema.transitive:
+        from graphdb_free_mocha_sa_spark.operators.paths import (
+            _link, transitive_closure)
+        iri_edges = quads.filter(F.col("o_dt").isNull())
+        for p in sorted(schema.transitive):
+            closed = transitive_closure(_link(iri_edges, p, None))
+            first = first.unionByName(closed.select(
+                F.lit(graph).alias("g"), F.col("s"), F.lit(p).alias("p"),
+                F.col("o__lex").alias("o_lex"), F.col("o__dt").alias("o_dt"),
+                F.col("o__lang").alias("o_lang"),
+                F.col("o__num").alias("o_num"), F.col("o__ts").alias("o_ts")))
+    inferred = _round(spark, first, known)
     if inferred is None:
-        return spark.createDataFrame([], quads.schema).select(*QUAD_COLS)
-    # Pin the final closure (r11 opt, guide §5): the result used to escape
-    # as a lazy dropDuplicates over the iteration checkpoints, so EVERY
-    # later reader (each query over df_with_inference, every DRed scan of
-    # `inferred`) re-ran that shuffle. One materialization here, memory
-    # scans everywhere after.
-    return (inferred.dropDuplicates(["s", "p", "o_lex", "o_dt", "o_lang"])
-            .localCheckpoint())
+        return spark.createDataFrame([], QUAD_SCHEMA)
+    if not one_shot:
+        # later rounds chain transitive edges DERIVED by the fixpoint
+        # (via subPropertyOf / inverseOf / symmetry) through step's rdfp4
+        more = _semi_naive(spark, step, inferred,
+                           known.unionByName(inferred))
+        if more is not None:
+            inferred = inferred.unionByName(more)
+    # Pin the final closure (r11 opt, guide §5): every later reader (each
+    # query over df_with_inference, every DRed scan of `inferred`) would
+    # otherwise re-run this dedup shuffle.
+    return pin_inference(spark, inferred.dropDuplicates(
+        ["s", "p", "o_lex", "o_dt", "o_lang"]))
 
 
-TBOX_PREDS = (SUBCLASS, SUBPROP, DOMAIN, RANGE, INVERSE, EQ_CLASS, EQ_PROP,
-              ON_PROPERTY, HAS_VALUE, SOME_VALUES, ALL_VALUES)
+#: below this base size the fixpoint narrows to 4 partitions (wide shuffles
+#: don't amortize); also the bound of the closure entry probe, so the body
+#: can reuse the probed count instead of re-counting
+_CLOSURE_SMALL_PARTS_ROWS = 100_000
 
 
 def owl_horst_increment(spark: SparkSession, base: DataFrame,
@@ -803,67 +689,24 @@ def owl_horst_increment(spark: SparkSession, base: DataFrame,
     SURVEY §3 EP2 step 3).
 
     Returns the NEW inferred quads derivable from ``delta`` against the
-    existing ``base ∪ inferred`` closure, or ``None`` when the delta touches
-    the TBox (schema change ⇒ caller re-materializes from scratch — the
-    standard practical compromise; rules may invalidate, not just extend).
-    Work per micro-batch is proportional to the delta's consequences, never
-    to the full ABox.
+    existing ``base ∪ inferred`` closure (an empty frame when there are
+    none), or ``None`` when the delta touches the TBox (schema change ⇒
+    caller re-materializes from scratch — the standard practical
+    compromise; rules may invalidate, not just extend). Work per
+    micro-batch is proportional to the delta's consequences, never to the
+    full ABox.
     """
-    tbox_delta = delta.filter(
-        F.col("p").isin(*TBOX_PREDS)
-        | ((F.col("p") == RDF_TYPE)
-           & F.col("o_lex").isin(TRANSITIVE, SYMMETRIC,
-                                 FUNCTIONAL, INV_FUNCTIONAL)))
-    if not tbox_delta.isEmpty():
+    if not _tbox_facts(delta).isEmpty():
         return None
-    # Spark 4.1 Union-constraint-rewrite guard (see owl_horst_closure)
-    cp_key = "spark.sql.constraintPropagation.enabled"
-    cp_prev = spark.conf.get(cp_key, "true")
-    spark.conf.set(cp_key, "false")
-    try:
-        return _increment_body(spark, base, inferred, delta, graph)
-    finally:
-        spark.conf.set(cp_key, cp_prev)
-
-
-def _increment_body(spark: SparkSession, base: DataFrame,
-                    inferred: DataFrame, delta: DataFrame,
-                    graph: str) -> DataFrame | None:
     known = base.select(*QUAD_COLS)
     if inferred is not None:
         known = known.unionByName(inferred.select(*QUAD_COLS))
-    schema = Schema(known)
-    apply_rules = _rule_applier(spark, schema, graph)
-
-    new_inferred = None
-    d = delta.select(*QUAD_COLS).localCheckpoint()
+    step = _stepper(spark, Schema(known), graph)
     # the delta facts are part of the known world (delta×delta chains must
-    # resolve, and delta facts themselves are base data, not inferences).
-    # `known` grows as a LAZY union of the (lazy) base world plus PINNED
-    # per-iteration deltas (r11 opt, guide §2.4): the old
-    # known.unionByName(new).localCheckpoint() per iteration copied the
-    # whole base ∪ closure every step — a full-store materialization per
-    # micro-batch iteration at cluster scale.
-    known = known.unionByName(d)
-    for _ in range(MAX_ITERS):
-        new = apply_rules(d)
-        ts = _trans_step(d, known, schema.transitive, graph)
-        if ts is not None:
-            new = new.unionByName(ts)
-        fs = _functional_step(d, known, schema, graph)
-        if fs is not None:
-            new = new.unionByName(fs)
-        rs = _restriction_step(spark, d, known, schema, graph)
-        if rs is not None:
-            new = new.unionByName(rs)
-        new = _anti_known(new, known).localCheckpoint()
-        if new.isEmpty():
-            return new_inferred
-        new_inferred = (new if new_inferred is None
-                        else new_inferred.unionByName(new))
-        known = known.unionByName(new)
-        d = new
-    raise RuntimeError(f"incremental inference did not converge in {MAX_ITERS} iterations")
+    # resolve, and delta facts themselves are base data, not inferences)
+    d = delta.select(*QUAD_COLS).localCheckpoint()
+    new = _semi_naive(spark, step, d, known.unionByName(d))
+    return new if new is not None else spark.createDataFrame([], QUAD_SCHEMA)
 
 
 def _anti_known_bigside(new: DataFrame, known: DataFrame) -> DataFrame:
@@ -915,224 +758,43 @@ def owl_horst_decrement(spark: SparkSession, base_after: DataFrame,
     against the post-delete world, not restricted to old inferences.
     """
     # Pin the deleted set ONCE up front (r11 opt): callers pass a lazy
-    # anti-join ("triples whose last copy went away"); the TBox probe, the
-    # body's delta seed and the re-derive `removed` union all scan it —
-    # unpinned, the anti-join re-ran for each. Callers that already pinned
-    # it (the store's delete path) say so and skip the re-checkpoint.
+    # anti-join ("triples whose last copy went away") that every phase
+    # scans. Callers that already pinned it (the store's delete path) say
+    # so and skip the re-checkpoint.
     if not deleted_pinned:
         deleted = deleted.select(*QUAD_COLS).localCheckpoint()
-    # Bounded driver view of the deleted triples (r12 opt): while the
-    # deletion fits DRED_TERMS_BOUND, the TBox probe is a Python check over
-    # the collected rows (replacing a distributed isEmpty job) and the rows
-    # seed the driver-side cone fixpoint in _decrement_body. Above the
-    # bound, the distributed probe + loop run exactly as before.
-    d_head = _take_wide(deleted.select("s", "p", "o_lex", "o_dt", "o_lang"),
-                        DRED_TERMS_BOUND + 1)
-    d_rows = None
-    if len(d_head) <= DRED_TERMS_BOUND:
-        d_rows = [(r["s"], r["p"], r["o_lex"], r["o_dt"], r["o_lang"])
-                  for r in d_head]
-        markers = (TRANSITIVE, SYMMETRIC, FUNCTIONAL, INV_FUNCTIONAL)
-        if any(p in TBOX_PREDS or (p == RDF_TYPE and ol in markers)
-               for (_, p, ol, _, _) in d_rows):
+    # Bounded driver view of the deleted facts (r12 opt): while it fits
+    # DRED_TERMS_BOUND, the TBox probe is a Python check (no isEmpty job)
+    # and the rows seed the driver cone below.
+    d_rows = [tuple(r) for r in _take_wide(deleted.select(*QUAD_COLS[1:]),
+                                           DRED_TERMS_BOUND + 1)]
+    if len(d_rows) > DRED_TERMS_BOUND:
+        d_rows = None
+        if not _tbox_facts(deleted).isEmpty():
             return None
-    else:
-        tbox_delta = deleted.filter(
-            F.col("p").isin(*TBOX_PREDS)
-            | ((F.col("p") == RDF_TYPE)
-               & F.col("o_lex").isin(TRANSITIVE, SYMMETRIC,
-                                     FUNCTIONAL, INV_FUNCTIONAL)))
-        if not tbox_delta.isEmpty():
-            return None
-    # Spark 4.1: checkpointing a union whose children carry constraints
-    # referencing dropped join-side attributes throws "key not found" in
-    # UnionBase.rewriteConstraints — turn constraint propagation off for
-    # the maintenance plans (they are join/anti-join chains over pinned
-    # frames; constraint-derived filter pruning buys nothing here)
-    cp_key = "spark.sql.constraintPropagation.enabled"
-    cp_prev = spark.conf.get(cp_key, "true")
-    spark.conf.set(cp_key, "false")
-    try:
-        return _decrement_body(spark, base_after, inferred, deleted, graph,
-                               d_rows)
-    finally:
-        spark.conf.set(cp_key, cp_prev)
-
-
-def _driver_cone_rules_ok(schema: Schema) -> bool:
-    """True when every rule the over-delete fixpoint can fire is a pure
-    delta×TBox rule (rdfs2/3/7/9, rdfp3/8/14a/14b) — i.e. computable on the
-    driver from the deleted rows and the driver-closed schema alone. The
-    transitive / functional / restriction (rdfp15/16) steps join the delta
-    against the KNOWN world, so their presence keeps the distributed loop."""
-    return not (schema.transitive or schema.functional
-                or schema.inv_functional or schema.some_values
-                or schema.all_values)
-
-
-def _driver_cone(schema: Schema, seed_rows, bound: int):
-    """Driver-side over-delete cone (r12 opt, VERDICT r11 item 4): the set
-    of ``(s, p, o_lex, o_dt, o_lang)`` facts derivable from the deleted
-    seed by the delta-only Horst rules under the driver-closed TBox — the
-    exact rule mirror of :func:`_rule_applier` restricted to the rules
-    :func:`_driver_cone_rules_ok` admits. Because ``schema.subclass`` /
-    ``subprop`` are transitively closed, the fixpoint depth is the RULE
-    INTERACTION depth (typically 1-2), not the hierarchy depth, and it
-    runs in Python sets — zero Spark jobs. The caller probes the closure
-    ONCE with the final key set.
-
-    Sound over-approximation: propagation follows the true derivation
-    chain (exact shadow variants), including through facts that happen to
-    be base-asserted; anything over-deleted beyond the true cone is
-    restored by the re-derive pass, which is complete for every removed
-    fact (each premise shares a term with its conclusion). Returns None
-    when the cone outgrows ``bound`` (fall back to the distributed loop).
-    """
-    sc: dict = {}
-    for a, b in schema.subclass:
-        sc.setdefault(a, []).append(b)
-    sp: dict = {}
-    for a, b in schema.subprop:
-        sp.setdefault(a, []).append(b)
-    dom: dict = {}
-    for a, b in schema.domain:
-        dom.setdefault(a, []).append(b)
-    rng: dict = {}
-    for a, b in schema.range:
-        rng.setdefault(a, []).append(b)
-    inv: dict = {}
-    for a, b in schema.inverse:
-        inv.setdefault(a, []).append(b)
-    sym = schema.symmetric
-    hv_fwd: dict = {}   # (p, w_lex, w_dt, w_lang) -> [v]     (rdfp14a)
-    hv_bwd: dict = {}   # v -> [(p, w_lex, w_dt, w_lang)]     (rdfp14b)
-    for (v, p, val) in schema.has_value:
-        hv_fwd.setdefault((p, val[0], val[1], val[2]), []).append(v)
-        hv_bwd.setdefault(v, []).append((p, val[0], val[1], val[2]))
-
-    def step(f):
-        s, p, ol, od, olng = f
-        out = []
-        if p == RDF_TYPE:
-            for c2 in sc.get(ol, ()):                       # rdfs9
-                out.append((s, RDF_TYPE, c2, None, None))
-            for (hp, wl, wd, wlg) in hv_bwd.get(ol, ()):    # rdfp14b
-                out.append((s, hp, wl, wd, wlg))
-        for p2 in sp.get(p, ()):                            # rdfs7
-            out.append((s, p2, ol, od, olng))
-        for c in dom.get(p, ()):                            # rdfs2
-            out.append((s, RDF_TYPE, c, None, None))
-        if od is None:                                      # IRI object
-            for c in rng.get(p, ()):                        # rdfs3
-                out.append((ol, RDF_TYPE, c, None, None))
-            for p2 in inv.get(p, ()):                       # rdfp8
-                out.append((ol, p2, s, None, None))
-            if p in sym:                                    # rdfp3
-                out.append((ol, p, s, None, None))
-        for v in hv_fwd.get((p, ol, od, olng), ()):         # rdfp14a
-            out.append((s, RDF_TYPE, v, None, None))
-        return out
-
-    facts = set(seed_rows)
-    frontier = list(facts)
-    derived: set = set()
-    while frontier:
-        new = []
-        for f in frontier:
-            for gf in step(f):
-                if gf not in facts:
-                    facts.add(gf)
-                    derived.add(gf)
-                    new.append(gf)
-                    if len(facts) > bound:
-                        return None
-        frontier = new
-    return derived
-
-
-def _decrement_body(spark: SparkSession, base_after: DataFrame,
-                    inferred: DataFrame, deleted: DataFrame,
-                    graph: str, d_rows=None) -> DataFrame:
+    elif any(_is_tbox(f[1], f[2]) for f in d_rows):
+        return None
     inferred = (inferred.select(*QUAD_COLS) if inferred is not None
-                else spark.createDataFrame([], base_after.schema)
-                .select(*QUAD_COLS))
+                else spark.createDataFrame([], QUAD_SCHEMA))
     base_after = base_after.select(*QUAD_COLS)
-    d = deleted.select(*QUAD_COLS)      # pinned by owl_horst_decrement
-    # NOTE: no lazy checkpoint on the unions here — Spark's Union
-    # constraint rewrite hits "key not found" on lazily-checkpointed
-    # union members (observed on 4.1); the members are checkpointed
+    d = deleted.select(*QUAD_COLS)
     old_known = base_after.unionByName(inferred).unionByName(d)
     schema = Schema(old_known)          # TBox unchanged by this delete
-    apply_rules = _rule_applier(spark, schema, graph)
+    step = _stepper(spark, schema, graph)
 
-    def one_step(delta: DataFrame, known: DataFrame,
-                 both_sides: bool = False) -> DataFrame:
-        new = apply_rules(delta)
-        ts = _trans_step(delta, known, schema.transitive, graph)
-        if ts is not None:
-            new = new.unionByName(ts)
-        if both_sides and schema.transitive:
-            # over-delete accelerator: a deleted transitive edge's cone is
-            # known* ⋈ d ⋈ known* — computing the BOTH-side extension in
-            # one pass collapses the semi-naive loop from O(chain) to 2
-            # iterations (the closure contains every sub-chain, so the
-            # one-hop-each-side join over the closure reaches every
-            # crossing pair)
-            g_l = F.lit(graph)
-            for p in sorted(schema.transitive):
-                dd = delta.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
-                    .select(F.col("s").alias("ds"), F.col("o_lex").alias("do"))
-                k = known.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
-                    .select(F.col("s").alias("ks"), F.col("o_lex").alias("ko"))
-                k2 = k.select(F.col("ks").alias("ks2"),
-                              F.col("ko").alias("ko2"))
-                both = (k.join(dd, F.col("ko") == F.col("ds"))
-                        .join(k2, F.col("do") == F.col("ks2"))
-                        .select(g_l.alias("g"), F.col("ks").alias("s"),
-                                F.lit(p).alias("p"),
-                                F.col("ko2").alias("o_lex"),
-                                F.lit(None).cast("string").alias("o_dt"),
-                                F.lit(None).cast("string").alias("o_lang"),
-                                F.lit(None).cast("double").alias("o_num"),
-                                F.lit(None).cast("timestamp").alias("o_ts"))
-                        .select(*QUAD_COLS))
-                new = new.unionByName(both)
-        fs = _functional_step(delta, known, schema, graph)
-        if fs is not None:
-            new = new.unionByName(fs)
-        rs = _restriction_step(spark, delta, known, schema, graph)
-        if rs is not None:
-            new = new.unionByName(rs)
-        return new.dropDuplicates(["s", "p", "o_lex", "o_dt", "o_lang"])
-
-    def _pin(df: DataFrame) -> DataFrame:
-        # re-alias every column (fresh expression ids) before pinning:
-        # Spark 4.1's Union constraint rewrite throws "key not found" when
-        # a union of checkpointed frames re-uses attribute ids
-        return df.select([F.col(c).alias(c) for c in df.columns]) \
-                 .localCheckpoint()
-
-    # ---- 1. over-delete fixpoint (cone of the deleted premises).
-    # `over` accumulates as a LAZY union of pinned pieces (r11 opt,
-    # guide §2.4): the old _pin(over.unionByName(cons)) re-materialized
-    # the whole over-delete set every iteration. The per-iteration cone
-    # KEYS are tiny (bounded by the deletion's consequence cone), so they
-    # are held as a DRIVER set while they fit DRED_TERMS_BOUND (r11 opt):
-    # the convergence subtraction and emptiness test become Python set
-    # ops — zero Spark jobs — and the closure probe gets its broadcast
-    # keys from a LocalRelation. Overflow degrades to the distributed
-    # key-frame shape (checkpoint + anti-join), which is the right plan
-    # for a genuinely huge cone.
-    # Driver cone fast path (r12 opt): when the deleted rows are driver-
-    # resident and every applicable rule is delta×TBox, the whole fixpoint
-    # runs in Python sets and the closure is probed ONCE with the final
-    # key set — 1 probe + 1 pin instead of ~3 jobs × iteration.
+    # ---- 1. over-delete: only INFERRED facts can be over-deleted. The
+    # cone is small and the closure is big, so the closure is probed with
+    # broadcast cone keys (a small-left left_semi against a big right
+    # would sort-merge the whole closure — measured 3x the wall).
+    terms = None
     cone = None
-    if d_rows is not None and _driver_cone_rules_ok(schema):
-        cone = _driver_cone(schema, d_rows, DRED_TERMS_BOUND)
+    if d_rows is not None and _delta_only_rules(schema):
+        # driver cone (r12 opt): the fixpoint runs on the worklist and
+        # the closure is probed ONCE with the final key set
+        cone = _worklist(schema, d_rows, DRED_TERMS_BOUND)
     if cone is not None:
         over = None
-        keys = sorted({(s, p, ol) for (s, p, ol, _, _) in cone})
+        keys = sorted({f[:3] for f in cone})
         if keys:
             ck = spark.createDataFrame(keys,
                                        "s string, p string, o_lex string")
@@ -1140,20 +802,130 @@ def _decrement_body(spark: SparkSession, base_after: DataFrame,
                                  "left_semi").localCheckpoint()
             if not cons.isEmpty():
                 over = cons
-        return _rederive(spark, base_after, inferred, deleted, graph,
-                         schema, one_step, _pin, over,
-                         cone_rows=cone, d_rows=d_rows)
+        # the removed vocabulary is already in memory: `over` rows are
+        # cone-keyed, so the cone and seed terms cover them (a superset
+        # only widens the re-derive candidates) — zero jobs
+        rows = cone + d_rows
+        terms = (sorted({t for f in rows for t in (f[0], f[2])}),
+                 sorted({f[0] for f in rows}))
+    else:
+        over = _over_delete(spark, schema, step, d, old_known, inferred,
+                            graph)
 
-    over_parts: list[DataFrame] = []
+    if over is None:
+        remaining = inferred
+    else:
+        # LAZY on purpose: `over` is a pinned handful of rows, so the
+        # anti-join is a broadcast filter each reader pays in microseconds
+        # — re-materializing the full closure here made DRed cost as much
+        # as re-materialization (measured r8). The store bounds lineage
+        # depth by re-pinning after a few decrements (pin_inference).
+        remaining = _anti_known(inferred, over)
+    new_known = base_after.unionByName(remaining)
+
+    # ---- 2. re-derive: candidate premises share a term with a removed
+    # fact (true for every Horst rule), so the step is bounded by the
+    # removed facts' neighborhood, not the ABox. The removed set includes
+    # the DELETED base facts — a deleted explicit statement still
+    # derivable from the survivors re-appears as inferred (smooth delete).
+    # An object-side match is only ever needed against a removed fact's
+    # SUBJECT (rdfs3 range, functional sameAs), never its object: matching
+    # objects on every removed term would pull in every instance of a
+    # removed TYPE's class — the whole ABox for high-degree classes.
+    # Subject-side matches may need any removed term (symmetric/inverse
+    # conclusions flip s and o).
+    if terms is None:
+        removed = d if over is None else over.unionByName(d)
+        # Bounded driver fast path (r11 opt, guide §6 predicate pushdown):
+        # ONE pass over the world with two InSet predicates instead of two
+        # semi-join scans plus a dedup shuffle. The subject-term flag rides
+        # on the same collect (r12 opt).
+        t_rows = _take_wide(
+            removed.select(F.col("s").alias("t"), F.lit(1).alias("is_s"))
+            .unionByName(removed.filter(F.col("o_dt").isNull())
+                         .select(F.col("o_lex").alias("t"),
+                                 F.lit(0).alias("is_s")))
+            .groupBy("t").agg(F.max("is_s").alias("is_s")),
+            DRED_TERMS_BOUND + 1)
+        if len(t_rows) <= DRED_TERMS_BOUND:
+            terms = ([r["t"] for r in t_rows],
+                     [r["t"] for r in t_rows if r["is_s"] == 1])
+        else:
+            # over the bound: broadcast semi-joins, never a sort-merge
+            # (r9 profile: 7.0 s -> sub-second)
+            all_t = (removed.select(F.col("s").alias("t"))
+                     .unionByName(removed.filter(F.col("o_dt").isNull())
+                                  .select(F.col("o_lex").alias("t")))
+                     .dropDuplicates())
+            subj_t = removed.select(F.col("s").alias("t")).dropDuplicates()
+            cand = (new_known.join(F.broadcast(all_t),
+                                   F.col("s") == F.col("t"), "left_semi")
+                    .unionByName(new_known.join(F.broadcast(subj_t),
+                                                F.col("o_lex") == F.col("t"),
+                                                "left_semi"))
+                    .dropDuplicates(["g", "s", "p", "o_lex", "o_dt",
+                                     "o_lang"]))
+    if terms is not None:
+        all_terms, s_terms = terms
+        cand = new_known.filter(
+            F.col("s").isin(all_terms)
+            | (F.col("o_lex").isin(s_terms) if s_terms else F.lit(False)))
+    # PIN the candidates before fanning them into the rule union: every
+    # rule branch references `cand`, and unpinned it re-computes its scan
+    # of the FULL new_known per branch (r9 profile: 15.2 s of a 19.5 s
+    # decrement; 2.6 s after the pin)
+    cand = pin_inference(spark, cand)
+    restored = pin_inference(spark, _anti_known_bigside(
+        step(cand, new_known), new_known))
+    if restored.isEmpty():
+        return remaining
+    out = remaining.unionByName(restored)
+    # restored facts may support further restorations — standard increment
+    more = owl_horst_increment(spark, base_after, out, restored, graph)
+    if more is not None:
+        out = out.unionByName(_anti_known(more, base_after.unionByName(out)))
+    return pin_inference(spark, out.dropDuplicates(
+        ["s", "p", "o_lex", "o_dt", "o_lang"]))
+
+
+def _over_delete(spark: SparkSession, schema: Schema, step, d: DataFrame,
+                 old_known: DataFrame, inferred: DataFrame,
+                 graph: str) -> DataFrame | None:
+    """DRed's distributed over-delete fixpoint: the inferred facts with a
+    premise in the deleted set ``d``, or ``None``. ``over`` accumulates
+    as a LAZY union of pinned pieces (r11 opt, guide §2.4). The
+    per-round cone KEYS are held as a DRIVER set while they fit
+    DRED_TERMS_BOUND (r11 opt): the convergence subtraction and emptiness
+    test become Python set ops, and the closure probe gets its broadcast
+    keys from a LocalRelation. Overflow degrades to the distributed
+    key-frame shape (checkpoint + anti-join), the right plan for a
+    genuinely huge cone."""
+    g = F.lit(graph)
+
+    def cone_step(delta: DataFrame, known: DataFrame) -> DataFrame:
+        new = step(delta, known)
+        for p in sorted(schema.transitive):
+            # a deleted transitive edge's cone is known* ⋈ d ⋈ known* —
+            # the BOTH-side extension in one pass collapses the loop from
+            # O(chain) to 2 rounds (the closure contains every sub-chain,
+            # so one hop each side over it reaches every crossing pair)
+            dd = delta.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
+                .select(F.col("s").alias("ds"), F.col("o_lex").alias("do"))
+            k = known.filter((F.col("p") == p) & F.col("o_dt").isNull()) \
+                .select(F.col("s").alias("ks"), F.col("o_lex").alias("ko"))
+            k2 = k.select(F.col("ks").alias("ks2"), F.col("ko").alias("ko2"))
+            new = new.unionByName(
+                k.join(dd, F.col("ko") == F.col("ds"))
+                .join(k2, F.col("do") == F.col("ks2"))
+                .select(g.alias("g"), F.col("ks").alias("s"),
+                        F.lit(p).alias("p"), F.col("ko2").alias("o_lex"),
+                        *_nulls()))
+        return new
+
     over = None
     over_keys: set | None = set()
     for _ in range(MAX_ITERS):
-        cons = one_step(d, old_known, both_sides=True)
-        # only INFERRED facts can be over-deleted. The cone is small and
-        # the closure is big: probe the closure with the broadcast cone
-        # keys (a small-left left_semi against a big right would
-        # sort-merge the whole closure — measured 3x the wall)
-        ck = cons.select("s", "p", "o_lex").dropDuplicates()
+        ck = cone_step(d, old_known).select("s", "p", "o_lex").dropDuplicates()
         if over_keys is not None:
             head = _take_wide(ck, DRED_TERMS_BOUND + 1)
             if len(head) <= DRED_TERMS_BOUND:
@@ -1169,11 +941,9 @@ def _decrement_body(spark: SparkSession, base_after: DataFrame,
         if over_keys is None:
             if over is not None:
                 # subtract already-over-deleted keys BEFORE the closure
-                # probe: the convergence iteration then terminates on the
-                # (tiny, checkpointed) key set without rescanning the full
-                # closure (r9 profile: the confirm iteration cost a
-                # 540k-row semi scan + checkpoint, ~2 s, to learn
-                # "nothing new")
+                # probe, so the convergence round terminates on the tiny
+                # pinned key set (r9 profile: the confirm round cost a
+                # 540k-row semi scan + checkpoint to learn "nothing new")
                 ck = _anti_known(
                     ck.withColumns({"o_dt": F.lit(None).cast("string"),
                                     "o_lang": F.lit(None).cast("string")}),
@@ -1185,140 +955,12 @@ def _decrement_body(spark: SparkSession, base_after: DataFrame,
                              "left_semi").localCheckpoint()
         if cons.isEmpty():
             break
-        over_parts.append(cons)
-        over = over_parts[0]
-        for op_ in over_parts[1:]:
-            over = over.unionByName(op_)
+        over = cons if over is None else over.unionByName(cons)
         d = cons
     else:
         raise RuntimeError(
             f"DRed over-delete did not converge in {MAX_ITERS} iterations")
-    return _rederive(spark, base_after, inferred, deleted, graph,
-                     schema, one_step, _pin, over)
-
-
-def _rederive(spark: SparkSession, base_after: DataFrame,
-              inferred: DataFrame, deleted: DataFrame, graph: str,
-              schema: Schema, one_step, _pin, over: DataFrame | None,
-              cone_rows=None, d_rows=None) -> DataFrame:
-    if over is None:
-        remaining = inferred
-    else:
-        # LAZY on purpose: `over` is a pinned handful of rows, so the
-        # anti-join is a broadcast filter each reader pays in microseconds
-        # — re-materializing the full closure here made DRed cost as much
-        # as re-materialization (measured r8). The store bounds lineage
-        # depth by re-pinning after a few decrements (pin_inference).
-        remaining = _anti_known(inferred, over)
-    new_known = base_after.unionByName(remaining)
-
-    # ---- 2. re-derive: candidate premises share a term with a removed
-    # fact (true for every Horst rule), so the first step is bounded by
-    # the removed facts' neighborhood, not the ABox. The seed includes the
-    # DELETED base facts themselves — a deleted explicit statement still
-    # derivable from the survivors re-appears as inferred (smooth delete)
-    removed = (deleted.select(*QUAD_COLS) if over is None
-               else over.unionByName(deleted.select(*QUAD_COLS)))
-    # Per-rule analysis of which candidate premises can restore a removed
-    # fact (one premise from `cand`, the other from `known` — the rule
-    # steps are all delta×known): the premise either SHARES A SUBJECT /
-    # OBJECT-IS one of the removed terms... but an object-side match is
-    # only ever needed against the removed fact's SUBJECT (rdfs3 range,
-    # functional-sameAs), never its object. Filtering the o side on all
-    # removed terms would pull in every instance of a removed TYPE's
-    # class — the whole ABox for high-degree classes (measured: DRed
-    # slower than re-materialization). Subject-side matches may need any
-    # removed term (symmetric/inverse conclusions flip s and o).
-    # Driver term shortcut (r12 opt): on the driver-cone path the removed
-    # vocabulary is already in memory — `over` rows are cone-keyed inferred
-    # facts, so their subjects/objects are covered by the cone rows' terms
-    # (a superset when some cone keys matched nothing; supersets only widen
-    # `cand`, and re-derive stays complete). Zero jobs instead of two
-    # driver collects.
-    if cone_rows is not None:
-        drows = list(cone_rows) + list(d_rows or [])
-        s_terms = sorted({s for (s, _, _, _, _) in drows})
-        all_terms = sorted({t for (s, _, ol, _, _) in drows
-                            for t in (s, ol)})
-        cand = new_known.filter(
-            F.col("s").isin(all_terms)
-            | (F.col("o_lex").isin(s_terms) if s_terms else F.lit(False)))
-        cand = _pin(cand)
-        return _rederive_tail(spark, base_after, remaining, new_known,
-                              cand, graph, one_step, _pin)
-    terms = (removed.select(F.col("s").alias("t"))
-             .unionByName(removed.filter(F.col("o_dt").isNull())
-                          .select(F.col("o_lex").alias("t")))
-             .dropDuplicates())
-    # Bounded driver fast path (r11 opt, guide §6 predicate pushdown): the
-    # removed-term set is usually tiny (it is the deletion's consequence
-    # cone's vocabulary). When it fits a driver bound, the candidate scan
-    # is ONE pass over the world with two InSet predicates — pushdown-
-    # friendly at the parquet scan — instead of two full semi-join scans
-    # plus a 6-column dropDuplicates shuffle. Over the bound, the original
-    # broadcast semi-join shape runs (still never a sort-merge: the
-    # removed-term keys are broadcast — r9 profile: 7.0 s -> sub-second).
-    # The subject-term list rides on the SAME collect as the full term
-    # list via an is-subject flag (r12 opt: was a second collect job).
-    t_rows = _take_wide(
-        removed.select(F.col("s").alias("t"), F.lit(1).alias("is_s"))
-        .unionByName(removed.filter(F.col("o_dt").isNull())
-                     .select(F.col("o_lex").alias("t"),
-                             F.lit(0).alias("is_s")))
-        .groupBy("t").agg(F.max("is_s").alias("is_s")),
-        DRED_TERMS_BOUND + 1)
-    if len(t_rows) <= DRED_TERMS_BOUND:
-        all_terms = [r["t"] for r in t_rows]
-        s_terms = [r["t"] for r in t_rows if r["is_s"] == 1]
-        cand = new_known.filter(
-            F.col("s").isin(all_terms)
-            | (F.col("o_lex").isin(s_terms) if s_terms else F.lit(False)))
-    else:
-        subj_terms = removed.select(F.col("s").alias("t")).dropDuplicates()
-        cand = new_known.join(F.broadcast(terms), F.col("s") == F.col("t"),
-                              "left_semi") \
-            .unionByName(new_known.join(F.broadcast(subj_terms),
-                                        F.col("o_lex") == F.col("t"),
-                                        "left_semi")) \
-            .dropDuplicates(["g", "s", "p", "o_lex", "o_dt", "o_lang"])
-    # PIN the candidate set before fanning it into the rule union: every
-    # rule branch of one_step references `cand`, and an unpinned cand
-    # re-computes its two semi-joins over the FULL new_known per branch —
-    # ~20 world rescans for a handful of candidate rows (r9 profile:
-    # 15.2 s of the 19.5 s decrement; 2.6 s after the pin)
-    cand = _pin(cand)
-    return _rederive_tail(spark, base_after, remaining, new_known, cand,
-                          graph, one_step, _pin)
-
-
-def _rederive_tail(spark: SparkSession, base_after: DataFrame,
-                   remaining: DataFrame, new_known: DataFrame,
-                   cand: DataFrame, graph: str, one_step, _pin) -> DataFrame:
-    restored = _pin(_anti_known_bigside(one_step(cand, new_known),
-                                        new_known))
-    if restored.isEmpty():
-        return remaining
-    out = remaining.unionByName(restored)
-    # restored facts may support further restorations — standard increment
-    more = owl_horst_increment(spark, base_after, out, restored, graph)
-    if more is not None and not more.isEmpty():
-        out = out.unionByName(
-            _anti_known(more, base_after.unionByName(out)))
-    return _pin(out.dropDuplicates(["s", "p", "o_lex", "o_dt", "o_lang"]))
-
-
-def pin_inference(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """localCheckpoint an inferred frame with constraint propagation off
-    (same Spark 4.1 Union-rewrite hazard as inside the decrement — the
-    frame may be a stack of anti-joins over checkpointed members)."""
-    cp_key = "spark.sql.constraintPropagation.enabled"
-    cp_prev = spark.conf.get(cp_key, "true")
-    spark.conf.set(cp_key, "false")
-    try:
-        return df.select([F.col(c).alias(c) for c in df.columns]) \
-                 .localCheckpoint()
-    finally:
-        spark.conf.set(cp_key, cp_prev)
+    return over
 
 
 def expand_sameas(quads: DataFrame, comp: DataFrame) -> DataFrame:
@@ -1373,6 +1015,30 @@ LAST_CC_ITERS = 0
 SMALL_CC_EDGES = 2000
 
 
+def _union_find(edges) -> dict:
+    """Driver connected components of an undirected edge list:
+    ``{term: canon}`` with the canon the min member of its class — the
+    same dictionary as the distributed min-label propagation."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+    comp: dict = {}
+    for x in list(parent):
+        comp.setdefault(find(x), []).append(x)
+    return {m: c for members in comp.values()
+            for c in (min(members),) for m in members}
+
+
 def sameas_components(spark: SparkSession, quads: DataFrame,
                       seed: DataFrame | None = None,
                       small_path: bool = True) -> DataFrame:
@@ -1407,28 +1073,10 @@ def sameas_components(spark: SparkSession, quads: DataFrame,
         # graph is big — fall through to the checkpointed fixpoint
         rows = _take_wide(edges, SMALL_CC_EDGES + 1)
         if len(rows) <= SMALL_CC_EDGES:
-            parent: dict = {}
-
-            def find(x):
-                parent.setdefault(x, x)
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for r in rows:
-                ra, rb = find(r["a"]), find(r["b"])
-                if ra != rb:
-                    parent[ra] = rb
-            comp: dict = {}
-            for x in parent:
-                comp.setdefault(find(x), []).append(x)
-            out = []
-            for members in comp.values():
-                c = min(members)              # min-label, as the fixpoint
-                out.extend((m, c) for m in members)
+            canon = _union_find((r["a"], r["b"]) for r in rows)
             LAST_CC_ITERS = 0
-            return spark.createDataFrame(out, "term string, canon string")
+            return spark.createDataFrame(list(canon.items()),
+                                         "term string, canon string")
     edges = edges.localCheckpoint()   # pin: re-read every fixpoint iter
     labels = (edges.select(F.col("a").alias("term"))
               .dropDuplicates()
@@ -1538,34 +1186,16 @@ def collect_gate_state(spark: SparkSession, quads: DataFrame):
         .select("p", "s", "o_lex"), GATE_STATE_BOUND + 1)
     if len(rows) > GATE_STATE_BOUND:
         return None
-    parent: dict = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
     pairs = {DISJOINT: set(), COMPLEMENT: set()}
     for r in rows:
-        if r["p"] == SAMEAS:
-            ra, rb = find(r["s"]), find(r["o_lex"])
-            if ra != rb:
-                parent[ra] = rb
-        else:
+        if r["p"] != SAMEAS:
             a, b = r["s"], r["o_lex"]
             pairs[r["p"]].add((a, b) if a <= b else (b, a))
-    comp: dict = {}
-    for x in list(parent):
-        comp.setdefault(find(x), []).append(x)
-    canon: dict = {}
+    canon = _union_find((r["s"], r["o_lex"]) for r in rows
+                        if r["p"] == SAMEAS)
     members: dict = {}
-    for mem in comp.values():
-        c = min(mem)                    # min-label, as sameas_components
-        members[c] = mem
-        for m in mem:
-            canon[m] = c
+    for m, c in canon.items():
+        members.setdefault(c, []).append(m)
     return {"canon": canon, "members": members, "pairs": pairs}
 
 

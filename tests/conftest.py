@@ -25,6 +25,26 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def force_distributed(monkeypatch):
+    """Zero both driver-side inference bounds, so fixture-sized data runs
+    the distributed Spark paths: the closure's semi-naive loop
+    (SMALL_ABOX_QUADS) and DRed's over-delete key frame and semi-join
+    re-derive (DRED_TERMS_BOUND)."""
+    from graphdb_free_mocha_sa_spark.operators import inference
+    monkeypatch.setattr(inference, "SMALL_ABOX_QUADS", 0)
+    monkeypatch.setattr(inference, "DRED_TERMS_BOUND", 0)
+
+
+@pytest.fixture(params=["driver", "distributed"])
+def inference_path(request):
+    """Run a test once on the driver paths and once under
+    :func:`force_distributed`."""
+    if request.param == "distributed":
+        request.getfixturevalue("force_distributed")
+    return request.param
+
+
 @pytest.fixture(scope="session")
 def tables(spark):
     from graphdb_free_mocha_sa_spark.sources.registry import load_tables
@@ -100,6 +120,8 @@ def assert_matches_duck(spark_df, duck_con, sql, sort_cols=True, ndigits=6):
 # no signal at all — VERDICT r11 item 2). The full suite remains the
 # release gate: run it with SPARK_GRAFT_FULL_TESTS=1 (CI/builder) — every
 # deselected file is still exercised there, nothing is removed.
+# test_inference_fuzz.py is not listed: it keeps one seed of each
+# differential fuzzer in the fast tier and marks its other seeds slow.
 SLOW_FILES = {
     "test_agg_fuzz.py",
     "test_algebra_fuzz.py",
@@ -107,7 +129,6 @@ SLOW_FILES = {
     "test_consistency_fuzz.py",
     "test_expr_fuzz.py",
     "test_fts_fuzz.py",
-    "test_inference_fuzz.py",
     "test_order_fuzz.py",
     "test_paths_fuzz.py",
     "test_pipeline_random.py",

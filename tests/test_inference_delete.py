@@ -151,3 +151,48 @@ def test_tbox_delete_rematerializes(spark):
     assert got == _fresh_closure(spark, st)
     assert ("urn:x", RDF_TYPE, "urn:B") in got
     assert ("urn:x", RDF_TYPE, "urn:C") not in got
+
+
+def test_decrement_never_touches_session_conf(spark, force_distributed):
+    """The session is shared by concurrent requests, so maintenance must
+    not flip session conf: while one thread runs a forced-distributed DRed
+    decrement, another polling the two confs the engine used to flip
+    never sees either value change."""
+    import threading
+    import time
+
+    from graphdb_free_mocha_sa_spark.operators.inference import (
+        owl_horst_closure, owl_horst_decrement)
+    keys = ("spark.sql.constraintPropagation.enabled",
+            "spark.sql.limit.initialNumPartitions")
+
+    def snap():
+        return tuple(spark.conf.get(k, None) for k in keys)
+
+    edges = [(f"urn:n{i}", "urn:t", f"urn:n{i+1}") for i in range(4)]
+    tbox = [("urn:t", RDF_TYPE, TRANS), ("urn:A", SC, "urn:B"),
+            ("urn:x", RDF_TYPE, "urn:A")]
+    inferred = owl_horst_closure(spark, _mk(spark, edges + tbox))
+    victims = [edges[1], ("urn:x", RDF_TYPE, "urn:A")]
+    base_after = _mk(spark, [t for t in edges + tbox if t not in victims])
+    expected = snap()
+    seen = set()
+    done = threading.Event()
+
+    def poll():
+        while not done.is_set():
+            seen.add(snap())
+            time.sleep(0.001)
+
+    poller = threading.Thread(target=poll)
+    poller.start()
+    try:
+        out = owl_horst_decrement(spark, base_after, inferred,
+                                  _mk(spark, victims))
+        out.count()
+    finally:
+        done.set()
+        poller.join(timeout=30)
+    assert not poller.is_alive()
+    assert seen == {expected}
+    assert snap() == expected

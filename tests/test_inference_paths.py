@@ -72,13 +72,13 @@ def test_transitive_symmetric_inverse(spark):
 
 
 @pytest.fixture(params=["worklist", "distributed"])
-def closure_fn(request, monkeypatch):
+def closure_fn(request):
     """Run the same closure through BOTH implementations: the driver-side
     small-ABox worklist (default for tiny data) and the distributed
-    DataFrame fixpoint (forced by zeroing the small-ABox cutoff)."""
+    DataFrame fixpoint (forced by the force_distributed fixture)."""
     from graphdb_free_mocha_sa_spark.operators import inference
     if request.param == "distributed":
-        monkeypatch.setattr(inference, "SMALL_ABOX_QUADS", 0)
+        request.getfixturevalue("force_distributed")
     return inference.owl_horst_closure
 
 
@@ -255,7 +255,7 @@ def test_sameas_cliques(spark):
     assert canon["urn:b1"] == canon["urn:b2"] == "urn:b1"
 
 
-def test_random_closure_worklist_vs_distributed_equivalence(spark, monkeypatch):
+def test_random_closure_worklist_vs_distributed_equivalence(spark, request):
     """Differential property test: on RANDOM TBox+ABox mixes (subclass/
     subproperty/domain/range/transitive/symmetric/inverse/equivalent/
     functional/restriction vocabulary), the driver-side worklist closure
@@ -269,6 +269,7 @@ def test_random_closure_worklist_vs_distributed_equivalence(spark, monkeypatch):
     classes = [f"urn:C{i}" for i in range(6)]
     props = [f"urn:p{i}" for i in range(5)]
     nodes = [f"urn:n{i}" for i in range(10)]
+    cases = []
     for trial in range(3):
         triples = []
         for _ in range(4):
@@ -291,13 +292,13 @@ def test_random_closure_worklist_vs_distributed_equivalence(spark, monkeypatch):
         for _ in range(8):
             triples.append((rng.choice(nodes), RDF_TYPE, rng.choice(classes)))
         quads = mk_quads(spark, list(dict.fromkeys(triples)))
-
         small = inference.owl_horst_closure(spark, quads)
-        got_small = {(r_.s, r_.p, r_.o_lex) for r_ in small.collect()}
-        monkeypatch.setattr(inference, "SMALL_ABOX_QUADS", 0)
+        cases.append((quads, {(r_.s, r_.p, r_.o_lex)
+                              for r_ in small.collect()}))
+    request.getfixturevalue("force_distributed")
+    for trial, (quads, got_small) in enumerate(cases):
         dist = inference.owl_horst_closure(spark, quads)
         got_dist = {(r_.s, r_.p, r_.o_lex) for r_ in dist.collect()}
-        monkeypatch.undo()
         assert got_small == got_dist, (
             f"trial {trial}: worklist-only={sorted(got_small - got_dist)[:5]} "
             f"distributed-only={sorted(got_dist - got_small)[:5]}")

@@ -168,16 +168,16 @@ def test_in_window_dates_still_ordered(spark):
 # ------------------------------------------ multi-valued restriction nodes
 
 
-@pytest.mark.parametrize("force_distributed", [False, True])
-def test_multivalued_hasvalue_fires_all_rule_instances(spark, monkeypatch,
-                                                       force_distributed):
+@pytest.mark.parametrize("distributed", [False, True])
+def test_multivalued_hasvalue_fires_all_rule_instances(spark, request,
+                                                       distributed):
     # r9 fuzzer find (test_inference_fuzz seed 103): a restriction node
     # with TWO owl:hasValue triples is one rule instance per
     # (onProperty x value) combination — the dict-based Schema fired only
     # one, chosen nondeterministically by collect order.
     import graphdb_free_mocha_sa_spark.operators.inference as inf
-    if force_distributed:
-        monkeypatch.setattr(inf, "SMALL_ABOX_QUADS", 0)
+    if distributed:
+        request.getfixturevalue("force_distributed")
     g = "urn:g"
     rows = [
         (g, "urn:R", inf.ON_PROPERTY, "urn:q", None, None, None, None),
