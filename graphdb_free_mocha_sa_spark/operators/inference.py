@@ -24,7 +24,8 @@ The reference engine materializes inference on write with ruleset
 * **One driver worklist** — :func:`_worklist` evaluates the same rules in
   the same semi-naive rounds over Python indexes, with zero Spark jobs. It
   closes ABoxes under SMALL_ABOX_QUADS and computes DRed's over-delete cone
-  for deletions under DRED_TERMS_BOUND.
+  for deletions under DRED_TERMS_BOUND (there keyed on the whole term
+  variant, so the cone follows every derivation out of the deleted facts).
 * **owl:sameAs as connected components** — iterative min-label
   propagation, or a driver union-find (:func:`_union_find`) below
   SMALL_CC_EDGES, producing a canonical-id dictionary (B41).
@@ -407,14 +408,24 @@ def _anti_known(new: DataFrame, known: DataFrame) -> DataFrame:
 
 
 def pin_inference(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """localCheckpoint an inference frame under FRESH expression ids. A
-    checkpoint keeps its source plan's attribute ids, and Spark 4.1's
-    Union constraint rewrite throws "key not found" on unions of pinned
-    frames that share them; re-aliasing every column first gives each
-    pinned frame ids of its own — a fix inside the plan, so no session
-    conf is switched off around it."""
-    return df.select([F.col(c).alias(c) for c in df.columns]) \
-             .localCheckpoint()
+    """localCheckpoint an inference frame behind a renaming projection.
+
+    A checkpointed relation carries the constraints Spark inferred for its
+    source plan. Under a Union of rule pieces those can name an attribute
+    that differs from the output column only in nullability (a literal
+    ``p`` beside nullable ones); the relation's id rewrites match
+    attributes exactly, so once the optimizer renumbers the output or the
+    relation is re-instantiated (the same frame twice in one plan), the
+    constraint keeps an id the relation no longer outputs, and Spark
+    4.1's Union constraint rewrite throws "key not found". Checkpointing
+    under temporary names and renaming back puts a projection the
+    optimizer cannot drop over the relation, and a projection passes on
+    only constraints over its own output — a fix inside the plan, so no
+    session conf is switched off around it."""
+    cols = df.columns
+    return (df.select([F.col(c).alias("__pin_" + c) for c in cols])
+            .localCheckpoint()
+            .select([F.col("__pin_" + c).alias(c) for c in cols]))
 
 
 def _round(spark: SparkSession, new: DataFrame,
@@ -465,7 +476,8 @@ def _delta_only_rules(schema: Schema) -> bool:
                 or schema.all_values)
 
 
-def _worklist(schema: Schema, seed_rows, bound: int) -> list | None:
+def _worklist(schema: Schema, seed_rows, bound: int,
+              exact: bool = False) -> list | None:
     """The one driver-side Horst evaluator: the rules of :func:`_stepper`
     in the rounds of :func:`_semi_naive`, over Python indexes — zero Spark
     jobs. Because ``schema.subclass`` / ``subprop`` are transitively
@@ -477,15 +489,20 @@ def _worklist(schema: Schema, seed_rows, bound: int) -> list | None:
     only in o_dt/o_lang match different rules. A derived fact is new when
     its ``(s, p, o_lex)`` key is — the newness key of :func:`_anti_known`
     — and every variant of a key first derived in one round is kept, as
-    the distributed anti-join keeps them. Returns the derived facts, or
-    ``None`` once more than ``bound`` are derived (the caller falls back
-    to Spark).
+    the distributed anti-join keeps them. With ``exact`` the newness key
+    is the whole ``(s, p, o_lex, o_dt, o_lang)`` variant instead. Returns
+    the derived facts, or ``None`` once more than ``bound`` are derived
+    (the caller falls back to Spark).
 
     Serves the small-ABox closure (seeds: the whole base) and DRed's
     over-delete cone (seeds: the deleted facts; only when
     :func:`_delta_only_rules`, since the delta×known rules need the
-    whole world in the indexes). The cone is a sound over-approximation:
-    anything over-deleted beyond the true cone is restored by re-derive.
+    whole world in the indexes). The cone runs ``exact``: it must follow
+    every derivation chain out of the seeds, and a seed or earlier cone
+    fact that merely shares a derived fact's key (an IRI vs a literal
+    object, or two literal tags) does not make that fact's own rules
+    fire. It is a sound over-approximation: anything over-deleted beyond
+    the true cone is restored by re-derive.
     """
     def index(pairs):
         out: dict = {}
@@ -507,13 +524,14 @@ def _worklist(schema: Schema, seed_rows, bound: int) -> list | None:
     fwd: dict = {p: {} for p in joined}     # p -> s -> {o}  (IRI objects)
     bwd: dict = {p: {} for p in joined}     # p -> o -> {s}
     types_of: dict = {}                     # node -> {class}
-    known: set = set()                      # (s, p, o_lex)
+    width = 5 if exact else 3               # the newness key
+    known: set = set()                      # f[:width] of every known f
     fresh: dict = {}                        # this round's new facts
     nulls = (None, None, None, None)
 
     def learn(f):
         s, p, o, dt = f[:4]
-        known.add((s, p, o))
+        known.add(f[:width])
         if dt is None and p in fwd:
             fwd[p].setdefault(s, set()).add(o)
             bwd[p].setdefault(o, set()).add(s)
@@ -521,8 +539,9 @@ def _worklist(schema: Schema, seed_rows, bound: int) -> list | None:
             types_of.setdefault(s, set()).add(o)
 
     def emit(s, p, o, shadow=nulls):
-        if (s, p, o) not in known:
-            fresh[(s, p, o) + shadow] = None
+        f = (s, p, o) + shadow
+        if f[:width] not in known:
+            fresh[f] = None
 
     def fire(f):
         s, p, o, dt, lang = f[:5]
@@ -791,7 +810,7 @@ def owl_horst_decrement(spark: SparkSession, base_after: DataFrame,
     if d_rows is not None and _delta_only_rules(schema):
         # driver cone (r12 opt): the fixpoint runs on the worklist and
         # the closure is probed ONCE with the final key set
-        cone = _worklist(schema, d_rows, DRED_TERMS_BOUND)
+        cone = _worklist(schema, d_rows, DRED_TERMS_BOUND, exact=True)
     if cone is not None:
         over = None
         keys = sorted({f[:3] for f in cone})

@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from graphdb_free_mocha_sa_spark.model import (OWL, QUAD_SCHEMA, RDF_TYPE,
-                                               RDFS)
+                                               RDFS, XSD_STRING)
 
 SC = RDFS + "subClassOf"
 TRANS = OWL + "TransitiveProperty"
@@ -151,6 +151,25 @@ def test_tbox_delete_rematerializes(spark):
     assert got == _fresh_closure(spark, st)
     assert ("urn:x", RDF_TYPE, "urn:B") in got
     assert ("urn:x", RDF_TYPE, "urn:C") not in got
+
+
+def test_dred_cone_follows_variant_sharing_a_deleted_key(spark,
+                                                        inference_path):
+    """A derived fact whose (s, p, o_lex) key equals a deleted fact's key
+    but whose object term differs (an IRI vs a string literal) is still in
+    the over-delete cone, and so is everything that follows from it."""
+    sp, rng = RDFS + "subPropertyOf", RDFS + "range"
+    st = _store(spark, [("urn:p1", sp, "urn:p2"), ("urn:p2", rng, "urn:C"),
+                        ("urn:a", "urn:p1", "urn:x")])
+    literal = spark.createDataFrame(
+        [("urn:g", "urn:a", "urn:p2", "urn:x", XSD_STRING, None, None,
+          None)], QUAD_SCHEMA)
+    st.add_quads(literal)
+    assert {("urn:a", "urn:p2", "urn:x"),
+            ("urn:x", RDF_TYPE, "urn:C")} <= _inferred_set(st)
+    st.delete_quads(_mk(spark, [("urn:a", "urn:p1", "urn:x")])
+                    .unionByName(literal))
+    assert _inferred_set(st) == _fresh_closure(spark, st) == set()
 
 
 def test_decrement_never_touches_session_conf(spark, force_distributed):

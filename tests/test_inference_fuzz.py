@@ -410,6 +410,13 @@ EDGE_CASES = {
         [iri("urn:q", RDF_TYPE, TRANSITIVE), iri("urn:a", "urn:q", "urn:b"),
          lit("urn:b", "urn:q", "world"), iri("urn:b", "urn:q", "urn:c")],
         {("urn:a", "urn:q", "urn:c")}),
+    # a rule union mixing a literal predicate (rdfs2) with a filtered one
+    # (rdfp3): the pinned rounds must stay unionable in the final closure
+    "symmetric_with_domain": (
+        [iri("urn:q", RDF_TYPE, SYMMETRIC), iri("urn:q", DOMAIN, "urn:C"),
+         iri("urn:a", "urn:q", "urn:b")],
+        {("urn:b", "urn:q", "urn:a"), ("urn:a", RDF_TYPE, "urn:C"),
+         ("urn:b", RDF_TYPE, "urn:C")}),
     # two base facts sharing (s, p, o_lex): only the IRI one fires rdfs3
     "range_iri_beside_literal": (
         [lit("urn:a", "urn:p", "urn:i1"), iri("urn:a", "urn:p", "urn:i1"),
